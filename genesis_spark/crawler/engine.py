@@ -253,7 +253,8 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
     all_rows = order_waves[0]
     for w in order_waves[1:]:
         all_rows = all_rows.unionByName(w)
-    ordered = with_global_seq(all_rows, ["host_rank", "depth", "pos"], "_gseq")
+    ordered = with_global_seq(all_rows, ["host_rank", "depth", "pos"], "_gseq",
+                              cached=cached)
     crawl_order_full = (ordered
                         .withColumn("crawl_seq", F.col("_gseq") + F.lit(seq_offset))
                         .withColumn("attempts",
@@ -378,6 +379,7 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
 
     max_round = frontier.agg(F.max("round")).first()[0]
     if max_round is None:
+        frontier.unpersist()
         return
     for r in range(next_round, max_round + 1):
         todo = frontier.filter((F.col("round") == r) &
@@ -431,10 +433,12 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
         frontier.unpersist()
         if new_frontier is not None:
             new_frontier.unpersist()
+        if r == max_round or (stop_after_round is not None
+                              and r >= stop_after_round):
+            return
         # re-read from the committed snapshot: every round starts from a flat
         # parquet scan, never a lineage chain through all prior rounds'
         # crawl plans (which grows the DAG superlinearly)
         frontier = (read_frontier_delta(spark, store) if delta_state
                     else store.read(spark, "frontier")).persist()
-        if stop_after_round is not None and r >= stop_after_round:
-            return
+    frontier.unpersist()        # resumed after the last round: nothing to do

@@ -16,11 +16,14 @@ from pyspark.sql import functions as F
 
 
 def with_global_seq(df: DataFrame, order_cols: list[str],
-                    seq_col: str = "seq") -> DataFrame:
+                    seq_col: str = "seq",
+                    cached: list[DataFrame] | None = None) -> DataFrame:
     """Append a dense 0-based global index following ``order_cols`` order.
     Order keys must be unique for a deterministic result. The intermediate
     is persisted so the count pass and the numbering pass see identical
-    partitioning; caller may ``.unpersist()`` the result's parent when done.
+    partitioning. It is appended to ``cached`` when given, for the caller
+    to ``.unpersist()`` once the result is materialized; otherwise it stays
+    cached, and its plan with it, for the life of the session.
     """
     import pandas as pd
 
@@ -28,6 +31,8 @@ def with_global_seq(df: DataFrame, order_cols: list[str],
            .sortWithinPartitions(*order_cols)
            .withColumn("_pid", F.spark_partition_id()))
     d = d.persist()
+    if cached is not None:
+        cached.append(d)
     sizes = {r["_pid"]: r["count"] for r in d.groupBy("_pid").count().collect()}
     offsets: dict[int, int] = {}
     acc = 0

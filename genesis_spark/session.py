@@ -14,6 +14,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MEM_GB = 48
+
+
+def default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: half of physical memory in whole GiB,
+    at least 1g and at most ``MAX_DRIVER_MEM_GB``.
+
+    In local mode the one JVM also hosts the executors; its resident size runs
+    about 2 GB above the heap, and the Python workers need room beside it.
+    """
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gb = min(MAX_DRIVER_MEM_GB, max(1, phys // 2 // 2**30))
+    return f"{gb}g"
+
 
 def get_spark(app_name: str = "genesis-spark",
               cores: int | str | None = None,
@@ -23,6 +37,9 @@ def get_spark(app_name: str = "genesis-spark",
 
     ``cores`` accepts an int (-> local[N]) or a full master string. Defaults to
     $SPARK_GRAFT_CPUS or '*'.
+
+    The driver heap is $SPARK_DRIVER_MEM when set, else
+    ``default_driver_memory()``: half of physical memory, 1g to 48g.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -45,7 +62,8 @@ def get_spark(app_name: str = "genesis-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

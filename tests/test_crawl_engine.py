@@ -9,6 +9,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from genesis_spark.crawler import engine
+from genesis_spark.sources.tables import SnapshotStore
 from tests.gen_fixtures import ensure
 
 
@@ -148,3 +149,15 @@ def test_scaled_install_crawl_invariants(spark, fixture_dir):
     assert got_docs == g_docs
     for df in res["_cached"]:
         df.unpersist()
+
+
+def test_run_rounds_leaves_no_cached_data(spark, fixture_dir, tmp_path):
+    """A crawl releases what it persists: the per-wave frames, the global
+    numbering's intermediate and the frontier re-read after each round."""
+    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
+    pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    engine.run_rounds(spark, seeds, pages, SnapshotStore(str(tmp_path)),
+                      bucketed=True)
+    assert persistent().size() == before
