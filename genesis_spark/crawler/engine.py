@@ -21,6 +21,8 @@ the Arrow-batched parse kernel.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,11 +38,15 @@ _VALID_URI_RE = U.VALID_URI_RE
 
 
 def install_seeds(seeds: DataFrame,
-                  host_budget: int = conf.WAVE_HOST_BUDGET) -> DataFrame:
+                  host_budget: int = conf.WAVE_HOST_BUDGET,
+                  cached: list[DataFrame] | None = None) -> DataFrame:
     """Feeder install (crawl_model.py:113-118 + mongo upsert S8): validate
     raw URLs, canonicalize, collapse duplicate canonical forms keeping the
     earliest (installed_at, seed_id), then assign the global priority rank
-    and round number (rank div budget). Returns the frontier table."""
+    and round number (rank div budget). Returns the frontier table.
+
+    ``cached`` receives the rank's persisted intermediate, as in
+    ``with_global_seq``, for the caller to release."""
     valid = seeds.filter(F.col("url").rlike(_VALID_URI_RE))
     canon = valid.select(
         U.canonicalize_expr(F.col("url")).alias("url"),
@@ -50,7 +56,8 @@ def install_seeds(seeds: DataFrame,
              .select("url",
                      F.col("first.installed_at").alias("installed_at"),
                      F.col("first.seed_id").alias("seq")))
-    ranked = with_global_seq(dedup, ["installed_at", "seq"], "host_rank")
+    ranked = with_global_seq(dedup, ["installed_at", "seq"], "host_rank",
+                             cached=cached)
     return ranked.select(
         F.xxhash64("url").alias("url_hash"),
         "url",
@@ -337,6 +344,24 @@ def compact_frontier(spark: SparkSession, store) -> int:
     return store.commit({"frontier_base": merged}, meta)
 
 
+_AQE = "spark.sql.adaptive.enabled"
+
+
+def _adaptive_off(crawl):
+    """Run ``crawl(spark, ...)`` with adaptive query execution off, and put
+    the caller's setting back when it returns or raises."""
+    @functools.wraps(crawl)
+    def wrapper(spark: SparkSession, *args, **kwargs):
+        prev = spark.conf.get(_AQE)
+        spark.conf.set(_AQE, "false")
+        try:
+            return crawl(spark, *args, **kwargs)
+        finally:
+            spark.conf.set(_AQE, prev)
+    return wrapper
+
+
+@_adaptive_off
 def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
                store, host_budget: int = conf.WAVE_HOST_BUDGET,
                stop_after_round: int | None = None,
@@ -363,13 +388,33 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     ``bucketed``/``use_bloom`` select the production-scale install (no
     global-rank barrier) and the sharded Bloom seen-prefilter — the same
     flags as ``run``/``crawl_frontier``; the three 10^10-row paths
-    compose (pinned at t3 scale by tests/test_crawl_t3.py)."""
+    compose (pinned at t3 scale by tests/test_crawl_t3.py).
+
+    The whole call, install and resume read included, runs with
+    ``spark.sql.adaptive.enabled=false``; the session's value is restored
+    on return or raise. A round is a few dozen small queries over deep
+    union/persist plans, and with AQE each stage boundary re-plans the
+    query and posts its full plan string: that planning, not the pages,
+    was most of a round's CPU (54 jobs a round with AQE, 23 without, on
+    the crawl benchmark). The cost at scale: the fetch-join strategy and
+    the shuffle partition counts are fixed when the round is planned, from
+    the statistics of the cached wave frames, not re-chosen at run time,
+    and skewed joins are not split. Small per-wave shuffles are no longer
+    coalesced, so each runs ``spark.sql.shuffle.partitions`` tasks: with 8
+    partitions and many waves (tests/test_crawl_t3.py) the crawl costs
+    about a third more CPU than with AQE. ``install_seeds*`` and
+    ``crawl_frontier`` called directly, and the query registry, keep the
+    session's AQE."""
     latest = store.latest()
-    install = install_seeds_scaled if bucketed else install_seeds
     if latest is None:
-        frontier = install(seeds, host_budget).persist()
+        installed: list[DataFrame] = []
+        frontier = (install_seeds_scaled(seeds, host_budget) if bucketed
+                    else install_seeds(seeds, host_budget, cached=installed)
+                    ).persist()
         base_name = "frontier_base" if delta_state else "frontier"
         store.commit({base_name: frontier}, {"round": -1, "seq_offset": 0})
+        for df in installed:
+            df.unpersist()
         next_round, seq_offset = 0, 0
     else:
         frontier = (read_frontier_delta(spark, store) if delta_state

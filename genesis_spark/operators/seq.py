@@ -95,15 +95,14 @@ def _ordered_pid(df: DataFrame, order_cols) -> DataFrame:
 
 
 def _pid_base(d: DataFrame, val) -> DataFrame:
-    """(_pid, _base): exclusive prefix of ``sum(val)`` over partition ids.
+    """(_pid, _base): exclusive prefix of ``sum(val)`` over partition ids,
+    NULL where no earlier partition has a non-NULL ``val`` (as SQL ``sum``).
     The window is unpartitioned but its input is the per-pid aggregate —
     O(partitions) rows, the one place a global window is free."""
     from pyspark.sql import Window
     sums = d.groupBy("_pid").agg(F.sum(val).alias("_s"))
-    pw = (Window.orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return sums.select(
-        "_pid", (F.sum("_s").over(pw) - F.col("_s")).alias("_base"))
+    pw = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    return sums.select("_pid", F.sum("_s").over(pw).alias("_base"))
 
 
 def with_global_running_sum(df: DataFrame, order_cols, val_col: str,
@@ -117,9 +116,12 @@ def with_global_running_sum(df: DataFrame, order_cols, val_col: str,
     base = _pid_base(d, F.col(val_col))
     lw = (Window.partitionBy("_pid").orderBy(*order_cols)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # NULL only where every value up to the row is NULL, as in the flat
+    # window: a partition of NULLs carries the earlier total forward
+    local = F.sum(val_col).over(lw)
     return (d.join(F.broadcast(base), "_pid")
-            .withColumn(out_col,
-                        F.sum(val_col).over(lw) + F.col("_base"))
+            .withColumn(out_col, F.coalesce(local + F.col("_base"), local,
+                                            F.col("_base")))
             .drop("_pid", "_base"))
 
 
@@ -134,7 +136,8 @@ def with_global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     lw = Window.partitionBy("_pid").orderBy(*order_cols)
     return (d.join(F.broadcast(base), "_pid")
             .withColumn(out_col,
-                        (F.row_number().over(lw) + F.col("_base")
+                        (F.row_number().over(lw)
+                         + F.coalesce("_base", F.lit(0))
                          + F.lit(start - 1)).cast("long"))
             .drop("_pid", "_base"))
 

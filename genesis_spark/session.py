@@ -6,6 +6,11 @@ coalescing), Arrow enabled for every pandas-UDF stage, explicit shuffle
 partition count, and bounded Arrow batch sizes for large HTML payloads
 (reference worker memory hygiene: docker-compose.yml:139 max-tasks-per-child,
 mirrored here by maxRecordsPerBatch).
+
+``crawler.engine.run_rounds`` turns AQE off for the length of a crawl and
+restores it after: a round is a few dozen small queries over deep
+union/persist plans, and AQE's per-stage re-planning of those plans cost
+more CPU than the round's pages. Everything else keeps AQE on.
 """
 
 from __future__ import annotations

@@ -156,8 +156,60 @@ def test_run_rounds_leaves_no_cached_data(spark, fixture_dir, tmp_path):
     numbering's intermediate and the frontier re-read after each round."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
+    # Spark caches by plan: an identical plan left cached by an earlier
+    # test would be shared with the crawl, and released by it
+    spark.catalog.clearCache()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
-    engine.run_rounds(spark, seeds, pages, SnapshotStore(str(tmp_path)),
-                      bucketed=True)
-    assert persistent().size() == before
+    for bucketed in (True, False):
+        engine.run_rounds(spark, seeds, pages,
+                          SnapshotStore(str(tmp_path / str(bucketed))),
+                          bucketed=bucketed)
+        assert persistent().size() == before, bucketed
+
+
+AQE = "spark.sql.adaptive.enabled"
+
+
+class _RoundFailsStore(SnapshotStore):
+    """Commits the install, raises on the first round's commit, and records
+    the AQE setting each commit ran under."""
+
+    def __init__(self, root, spark):
+        super().__init__(root)
+        self.spark, self.aqe = spark, []
+
+    def commit(self, tables, meta):
+        self.aqe.append(self.spark.conf.get(AQE))
+        if meta["round"] >= 0:
+            raise RuntimeError("round commit failed")
+        return super().commit(tables, meta)
+
+
+def test_run_rounds_restores_adaptive_setting(spark, fixture_dir, tmp_path):
+    """The crawl runs without AQE, install included, and leaves the
+    session's setting as it found it: on a normal return, after
+    ``stop_after_round``, when the crawl raises, and when it was off."""
+    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet") \
+        .orderBy("seed_id").limit(4)
+    pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
+    assert spark.conf.get(AQE) == "true"
+    store = SnapshotStore(str(tmp_path / "ok"))
+    engine.run_rounds(spark, seeds, pages, store, host_budget=2,
+                      stop_after_round=0)
+    assert spark.conf.get(AQE) == "true"
+    engine.run_rounds(spark, seeds, pages, store, host_budget=2)
+    assert spark.conf.get(AQE) == "true"
+    assert [m["round"] for m in store.snapshots()] == [-1, 0, 1]
+
+    for before in ("true", "false"):
+        spark.conf.set(AQE, before)
+        try:
+            failing = _RoundFailsStore(str(tmp_path / before), spark)
+            with pytest.raises(RuntimeError, match="round commit failed"):
+                engine.run_rounds(spark, seeds, pages, failing,
+                                  host_budget=2)
+            assert spark.conf.get(AQE) == before
+            assert failing.aqe == ["false", "false"]
+        finally:
+            spark.conf.set(AQE, "true")

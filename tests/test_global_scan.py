@@ -45,6 +45,23 @@ def test_running_sum_desc_order(spark):
     assert got == flat
 
 
+def test_running_sum_all_null_partitions(spark):
+    """Whole range partitions of NULL values, first and in the middle: the
+    flat window reads NULL until the first value, then carries the total
+    over the NULLs."""
+    nulls = (F.col("k") < 150) | ((F.col("k") >= 250) & (F.col("k") < 400))
+    df = _frame(spark, 500).withColumn(
+        "v", F.when(nulls, F.lit(None)).otherwise(F.col("v")))
+    w = (Window.orderBy("k")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    flat = {r["k"]: r["rs"] for r in
+            df.withColumn("rs", F.sum("v").over(w)).collect()}
+    got = {r["k"]: r["rs"] for r in
+           with_global_running_sum(df, ["k"], "v", "rs").collect()}
+    assert flat[0] is None and flat[300] == flat[249] > 0
+    assert got == flat
+
+
 def test_rank_matches_row_number(spark):
     df = _frame(spark)
     flat = {r["k"]: r["rn"] for r in
