@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from genesis_spark import conf
 from genesis_spark.functions import urls as U
 from genesis_spark.functions.parse import parse_pages
+from genesis_spark.operators import bloom
 from genesis_spark.operators.seq import with_global_seq
 
 # is_uri_validator (helper_method.py:187-192): scheme + non-empty netloc.
@@ -37,27 +38,25 @@ from genesis_spark.operators.seq import with_global_seq
 _VALID_URI_RE = U.VALID_URI_RE
 
 
-def install_seeds(seeds: DataFrame,
-                  host_budget: int = conf.WAVE_HOST_BUDGET,
-                  cached: list[DataFrame] | None = None) -> DataFrame:
-    """Feeder install (crawl_model.py:113-118 + mongo upsert S8): validate
-    raw URLs, canonicalize, collapse duplicate canonical forms keeping the
-    earliest (installed_at, seed_id), then assign the global priority rank
-    and round number (rank div budget). Returns the frontier table.
-
-    ``cached`` receives the rank's persisted intermediate, as in
-    ``with_global_seq``, for the caller to release."""
+def _dedup(seeds: DataFrame) -> DataFrame:
+    """The install prefix (crawl_model.py:113-118 + mongo upsert S8):
+    validate raw URLs, canonicalize, and collapse duplicate canonical forms
+    keeping the earliest (installed_at, seed_id) as (installed_at, seq)."""
     valid = seeds.filter(F.col("url").rlike(_VALID_URI_RE))
     canon = valid.select(
         U.canonicalize_expr(F.col("url")).alias("url"),
         "installed_at", "seed_id")
-    dedup = (canon.groupBy("url")
-             .agg(F.min(F.struct("installed_at", "seed_id")).alias("first"))
-             .select("url",
-                     F.col("first.installed_at").alias("installed_at"),
-                     F.col("first.seed_id").alias("seq")))
-    ranked = with_global_seq(dedup, ["installed_at", "seq"], "host_rank",
-                             cached=cached)
+    return (canon.groupBy("url")
+            .agg(F.min(F.struct("installed_at", "seed_id")).alias("first"))
+            .select("url",
+                    F.col("first.installed_at").alias("installed_at"),
+                    F.col("first.seed_id").alias("seq")))
+
+
+def _frontier(ranked: DataFrame, rank_col: str, budget: int,
+              *rank_cols: str) -> DataFrame:
+    """Project ranked seeds to the frontier table: every seed pending at
+    depth 0, in round ``rank_col div budget``, followed by ``rank_cols``."""
     return ranked.select(
         F.xxhash64("url").alias("url_hash"),
         "url",
@@ -67,16 +66,30 @@ def install_seeds(seeds: DataFrame,
         F.lit("pending").alias("state"),
         "installed_at", "seq",
         F.lit(0).alias("fail_count"),
-        (F.col("host_rank") / host_budget).cast("int").alias("round"),
-        "host_rank")
+        (F.col(rank_col) / budget).cast("int").alias("round"),
+        *rank_cols)
+
+
+def install_seeds(seeds: DataFrame,
+                  host_budget: int = conf.WAVE_HOST_BUDGET,
+                  cached: list[DataFrame] | None = None) -> DataFrame:
+    """Feeder install: the validate/canonicalize/MERGE-dedup prefix, then
+    the global priority rank ``host_rank`` in (installed_at, seq) order and
+    the round number (rank div budget). Returns the frontier table.
+
+    ``cached`` receives the rank's persisted intermediate, as in
+    ``with_global_seq``, for the caller to release."""
+    ranked = with_global_seq(_dedup(seeds), ["installed_at", "seq"],
+                             "host_rank", cached=cached)
+    return _frontier(ranked, "host_rank", host_budget, "host_rank")
 
 
 def install_seeds_bucketed(seeds: DataFrame,
                            bucket_budget: int = conf.WAVE_HOST_BUDGET,
                            buckets: int = conf.POLITENESS_BUCKETS,
                            portable_bucket: bool = False) -> DataFrame:
-    """Production-scale install: identical validate/canonicalize/MERGE-dedup
-    pipeline, but the priority queue is salted per politeness bucket
+    """Production-scale install: the same validate/canonicalize/MERGE-dedup
+    prefix, but the priority queue is salted per politeness bucket
     (Window.partitionBy(bucket)) instead of globally ordered — one shuffle,
     no global barrier, no sampling pass. This is the 10^10-row path (O1:
     'salted priority queue; global order reconstructed deterministically for
@@ -84,63 +97,34 @@ def install_seeds_bucketed(seeds: DataFrame,
     for golden runs. Within a host the order is identical (a host maps to
     one bucket); rounds interleave across buckets instead of globally.
 
+    ``host_rank = bucket * 2^40 + bucket_rank`` is the unique priority key
+    ``crawl_frontier`` orders by. Per-host FIFO is identical to the
+    reference (a host lives in one bucket and bucket_rank follows
+    (installed_at, seq)); only the CROSS-host interleaving of crawl_seq
+    differs from the golden global order — the verification invariants
+    that survive (seen set, documents, per-host order) are pinned by
+    tests/test_crawl_engine.py::test_scaled_install_crawl_invariants.
+
     ``portable_bucket`` swaps the host->bucket hash from xxhash64 (fastest,
     JVM-only) to an md5-based one a DuckDB oracle can replay bit-for-bit —
     the driver CORRECTNESS row runs this variant; everything downstream of
     the bucket assignment (window rank, round) is identical, and
     tests/test_crawl_engine.py asserts both variants agree on the per-host
     FIFO structure."""
-    from pyspark.sql import Window
-
-    valid = seeds.filter(F.col("url").rlike(_VALID_URI_RE))
-    canon = valid.select(
-        U.canonicalize_expr(F.col("url")).alias("url"),
-        "installed_at", "seed_id")
-    dedup = (canon.groupBy("url")
-             .agg(F.min(F.struct("installed_at", "seed_id")).alias("first"))
-             .select("url",
-                     F.col("first.installed_at").alias("installed_at"),
-                     F.col("first.seed_id").alias("seq")))
     host_key = U.host_name_expr(F.col("url"))
     if portable_bucket:
         bucket = (F.conv(F.substring(F.md5(host_key), 25, 8), 16, 10)
                   .cast("long") % buckets)
     else:
         bucket = F.pmod(F.xxhash64(host_key), F.lit(buckets))
-    bucketed = dedup.withColumn("bucket", bucket)
     w = Window.partitionBy("bucket").orderBy("installed_at", "seq")
-    return (bucketed
-            .withColumn("bucket_rank", F.row_number().over(w) - 1)
-            .select(F.xxhash64("url").alias("url_hash"), "url",
-                    host_key.alias("host_key"),
-                    F.lit(0).alias("depth"),
-                    U.network_type_expr(F.col("url")).alias("network"),
-                    F.lit("pending").alias("state"),
-                    "installed_at", "seq", F.lit(0).alias("fail_count"),
-                    (F.col("bucket_rank") / bucket_budget).cast("int")
-                    .alias("round"),
-                    "bucket", "bucket_rank"))
-
-
-def install_seeds_scaled(seeds: DataFrame,
-                         bucket_budget: int = conf.WAVE_HOST_BUDGET,
-                         buckets: int = conf.POLITENESS_BUCKETS,
-                         portable_bucket: bool = False) -> DataFrame:
-    """The bucketed install adapted to the crawl loop: identical to
-    ``install_seeds_bucketed`` plus a synthesized unique priority key
-    ``host_rank = bucket * 2^40 + bucket_rank`` so ``crawl_frontier`` can
-    order deterministically without a global barrier. Per-host FIFO is
-    identical to the reference (a host lives in one bucket and
-    bucket_rank follows (installed_at, seq)); only the CROSS-host
-    interleaving of crawl_seq differs from the golden global order — the
-    verification invariants that survive (seen set, documents, per-host
-    order) are pinned by tests/test_crawl_engine.py::
-    test_scaled_install_crawl_invariants."""
-    f = install_seeds_bucketed(seeds, bucket_budget, buckets,
-                               portable_bucket)
-    return f.withColumn(
-        "host_rank",
-        F.col("bucket") * F.lit(1 << 40) + F.col("bucket_rank"))
+    ranked = (_dedup(seeds)
+              .withColumn("bucket", bucket)
+              .withColumn("bucket_rank", F.row_number().over(w) - 1)
+              .withColumn("host_rank", F.col("bucket") * F.lit(1 << 40)
+                          + F.col("bucket_rank")))
+    return _frontier(ranked, "bucket_rank", bucket_budget,
+                     "bucket", "bucket_rank", "host_rank")
 
 
 _PASSTHROUGH = ["task_id", "host_rank", "round", "host_key", "depth", "pos"]
@@ -149,8 +133,7 @@ _PASSTHROUGH = ["task_id", "host_rank", "round", "host_key", "depth", "pos"]
 def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
                    max_depth: int = conf.MAX_ALLOWED_DEPTH,
                    seq_offset: int = 0,
-                   use_bloom: bool = False,
-                   use_cuckoo: bool = False) -> dict[str, DataFrame]:
+                   use_bloom: bool = False) -> dict[str, DataFrame]:
     """Crawl every frontier host to completion; returns crawl_order / seen /
     documents / frontier_done DataFrames matching the oracle goldens.
 
@@ -159,12 +142,7 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
     of the exact URL-seen anti-join: candidates the filter proves unseen
     skip the shuffle; possible-positives still go through the join, so
     results are identical either way (no false negatives by construction).
-    ``use_cuckoo`` selects the cuckoo-filter variant of the same contract
-    (D1 names "Bloom/cuckoo"; cuckoo additionally supports fingerprint
-    deletion for dead-removal — ``operators.cuckoo``). Mutually exclusive.
     """
-    if use_bloom and use_cuckoo:
-        raise ValueError("use_bloom and use_cuckoo are mutually exclusive")
     pages_j = pages.select(
         F.col("url_hash").alias("p_hash"), F.col("url").alias("p_url"),
         "status", "redirect_url", "html")
@@ -176,21 +154,9 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
     order_waves: list[DataFrame] = []
     doc_waves: list[DataFrame] = []
     cached: list[DataFrame] = []
-    # seen-prefilter adapter: (empty filter, build fn, probe fn) — the two
-    # variants share the incremental grow-by-union / probe-then-anti-join
-    # shape, so the wave loop below is written against the adapter
-    seen_filt = _build = _probe = None
     if use_bloom:
-        from genesis_spark.operators.bloom import (ShardedBloom, build_bloom,
-                                                   filter_not_seen)
-        seen_filt, _build, _probe = ShardedBloom.empty(), build_bloom, \
-            filter_not_seen
-    elif use_cuckoo:
-        from genesis_spark.operators.cuckoo import (ShardedCuckoo,
-                                                    build_cuckoo,
-                                                    filter_not_seen_cuckoo)
-        seen_filt, _build, _probe = ShardedCuckoo.empty(), build_cuckoo, \
-            filter_not_seen_cuckoo
+        seen_filt = bloom.ShardedBloom.empty()
+    seen_key = F.concat_ws("\x1f", F.col("task_id").cast("string"), "url")
 
     for d in range(max_depth + 1):
         fetched = wave.join(
@@ -224,10 +190,9 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
             F.posexplode("sub_url").alias("link_pos", "url"))
         # per-task URL-seen: exact left_anti (J2/D1) + first-occurrence in
         # (parent_pos, link_pos) order — identical to insert-on-admission
-        if seen_filt is not None:
-            key = F.concat_ws("\x1f", F.col("task_id").cast("string"), "url")
-            flagged = _probe(
-                kids.withColumn("_k", key), "_k", seen_filt).drop("_k")
+        if use_bloom:
+            flagged = bloom.filter_not_seen(
+                kids.withColumn("_k", seen_key), "_k", seen_filt).drop("_k")
             surely_new = flagged.filter(~F.col("_maybe_seen")) \
                 .drop("_maybe_seen")
             maybe = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
@@ -249,25 +214,21 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
                 .persist())
         cached.append(wave)
         seen = seen.unionByName(wave.select("task_id", "url", "host_key"))
-        if seen_filt is not None:
+        if use_bloom:
             # incremental: hash only THIS wave's admissions into the filter
             # (a from-scratch rebuild would re-hash the whole seen set every
             # wave — O(total rows) per wave instead of O(new rows))
-            key = F.concat_ws("\x1f", F.col("task_id").cast("string"), "url")
             seen_filt = seen_filt.union(
-                _build(wave.select(key.alias("_k")), "_k"))
+                bloom.build_bloom(wave.select(seen_key.alias("_k")), "_k"))
 
     all_rows = order_waves[0]
     for w in order_waves[1:]:
         all_rows = all_rows.unionByName(w)
-    ordered = with_global_seq(all_rows, ["host_rank", "depth", "pos"], "_gseq",
-                              cached=cached)
-    crawl_order_full = (ordered
-                        .withColumn("crawl_seq", F.col("_gseq") + F.lit(seq_offset))
-                        .withColumn("attempts",
-                                    F.when((F.col("depth") == 0) & ~F.col("ok"),
-                                           conf.MAX_SEED_ATTEMPTS).otherwise(1))
-                        .drop("_gseq"))
+    ordered = with_global_seq(all_rows, ["host_rank", "depth", "pos"],
+                              "crawl_seq", start=seq_offset, cached=cached)
+    crawl_order_full = ordered.withColumn(
+        "attempts", F.when((F.col("depth") == 0) & ~F.col("ok"),
+                           conf.MAX_SEED_ATTEMPTS).otherwise(1))
     crawl_order_full = crawl_order_full.persist()
     cached.append(crawl_order_full)
 
@@ -302,12 +263,17 @@ def run(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     """Install + crawl the whole frontier in one multi-wave job.
 
     ``bucketed=True`` uses the production-scale install (no global-rank
-    barrier; see install_seeds_scaled) — same seen set, documents, and
+    barrier; see install_seeds_bucketed) — same seen set, documents, and
     per-host order; cross-host crawl_seq interleaving differs from the
-    golden global order."""
-    install = install_seeds_scaled if bucketed else install_seeds
-    frontier = install(seeds, host_budget)
-    return crawl_frontier(spark, frontier, pages)
+    golden global order. The returned ``_cached`` list holds every frame
+    the install and the crawl persisted, for the caller to ``.unpersist()``
+    once it has read the results."""
+    cached: list[DataFrame] = []
+    frontier = (install_seeds_bucketed(seeds, host_budget) if bucketed
+                else install_seeds(seeds, host_budget, cached=cached))
+    res = crawl_frontier(spark, frontier, pages)
+    res["_cached"] = cached + res["_cached"]
+    return res
 
 
 def read_frontier_delta(spark: SparkSession, store) -> DataFrame:
@@ -368,7 +334,6 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
                delta_state: bool = False,
                bucketed: bool = False,
                use_bloom: bool = False,
-               use_cuckoo: bool = False,
                compact_every: int | None = None) -> None:
     """Production shape: one frontier round per iteration, one snapshot per
     round (ST2/ST4). Crash-resume = rerun with the same store; the last
@@ -408,7 +373,7 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     latest = store.latest()
     if latest is None:
         installed: list[DataFrame] = []
-        frontier = (install_seeds_scaled(seeds, host_budget) if bucketed
+        frontier = (install_seeds_bucketed(seeds, host_budget) if bucketed
                     else install_seeds(seeds, host_budget, cached=installed)
                     ).persist()
         base_name = "frontier_base" if delta_state else "frontier"
@@ -430,7 +395,7 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
         todo = frontier.filter((F.col("round") == r) &
                                (F.col("state") == "pending"))
         res = crawl_frontier(spark, todo, pages, seq_offset=seq_offset,
-                             use_bloom=use_bloom, use_cuckoo=use_cuckoo)
+                             use_bloom=use_bloom)
         seq_offset += res["crawl_order"].count()
         upd = res["frontier_done"].select(
             "url_hash", F.col("state").alias("_new_state"),

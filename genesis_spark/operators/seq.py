@@ -1,12 +1,27 @@
-"""Scalable global sequence numbering.
+"""Scalable global scans: numbering, running sums and leads in a global
+order, without the single-partition window.
 
 The crawl-ordering contract (SURVEY.md §2.6 O1) needs a total order index
-(frontier priority rank, crawl_seq). A single-partition window would serialize
-the whole table through one task — unacceptable at 10^10 rows. Instead:
-range-repartition on the order keys, sort within partitions, count rows per
-partition (one cheap job over the cached shuffle output), then add
-``offset[pid] + local_position`` per partition via Arrow batches. Two jobs,
-no global shuffle beyond the range sort itself.
+(frontier priority rank, crawl_seq). A single-partition window would
+serialize the whole table through one task — unacceptable at 10^10 rows.
+Every operator here uses the same two-level decomposition (as
+operators/pack.py's sharded path, but over an ORDER instead of an explicit
+shard key):
+
+  1. range-repartition + sort on the order columns (partitions are
+     order-contiguous, each bounded by ~table/partitions rows), persisted
+     so every later pass sees the identical partitioning,
+  2. one tiny per-partition aggregate (O(partitions) rows) prefix-scanned
+     with a window — unpartitioned, but over the AGGREGATED frame, which
+     is the sanctioned shape,
+  3. broadcast the per-partition exclusive base back and finish each row
+     from its own partition: its position (``with_global_seq``) or a
+     window partitioned BY partition id (``with_global_running_sum``) —
+     never a window over the whole table.
+
+All JVM: no Python worker, no collect beyond the O(partitions) base frame,
+and bit-identical to the flat single-partition window (asserted in
+tests/test_global_scan.py).
 """
 
 from __future__ import annotations
@@ -14,84 +29,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def with_global_seq(df: DataFrame, order_cols: list[str],
-                    seq_col: str = "seq",
-                    cached: list[DataFrame] | None = None) -> DataFrame:
-    """Append a dense 0-based global index following ``order_cols`` order.
-    Order keys must be unique for a deterministic result. The intermediate
-    is persisted so the count pass and the numbering pass see identical
-    partitioning. It is appended to ``cached`` when given, for the caller
-    to ``.unpersist()`` once the result is materialized; otherwise it stays
-    cached, and its plan with it, for the life of the session.
-    """
-    import pandas as pd
-
-    d = (df.repartitionByRange(*order_cols)
-           .sortWithinPartitions(*order_cols)
-           .withColumn("_pid", F.spark_partition_id()))
-    d = d.persist()
-    if cached is not None:
-        cached.append(d)
-    sizes = {r["_pid"]: r["count"] for r in d.groupBy("_pid").count().collect()}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-
-    # NOTE: never StructType.add() on df.schema — pyspark 4 caches the schema
-    # object and .add mutates it in place, corrupting the DataFrame's column
-    # resolution. Always copy.
-    from pyspark.sql import types as T
-    out_schema = T.StructType(
-        list(d.schema.fields) + [T.StructField(seq_col, T.LongType(), False)])
-
-    def number(batches):
-        pos = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(**{seq_col: pd.Series([], dtype="int64")})
-                continue
-            if pos is None:
-                pos = offsets.get(int(pdf["_pid"].iloc[0]), 0)
-            pdf = pdf.copy()
-            pdf[seq_col] = range(pos, pos + len(pdf))
-            pos += len(pdf)
-            yield pdf
-
-    return d.mapInPandas(number, out_schema).drop("_pid")
+# monotonically_increasing_id() puts the partition id in the upper 31 bits
+# and the row's index within its partition in the lower 33
+_MONO_ROW_BITS = 33
 
 
-# ---------------------------------------------------------------------------
-# Pure-JVM global scans (round-5: the replacement for every unpartitioned
-# Window.orderBy over base-table-scale data — the round-4 verdict's one
-# scale-killer class). Same two-level decomposition as operators/pack.py's
-# sharded path, but over an ORDER instead of an explicit shard key:
-#
-#   1. range-repartition + sort on the order columns (partitions are
-#      order-contiguous, each bounded by ~table/partitions rows),
-#   2. one tiny per-partition aggregate (O(partitions) rows) prefix-scanned
-#      with a window — unpartitioned, but over the AGGREGATED frame, which
-#      is the sanctioned shape,
-#   3. broadcast the per-partition exclusive base back and finish with a
-#      window partitioned BY partition id — every window partition is one
-#      range partition, never the whole table.
-#
-# No Arrow/Python nodes (unlike ``with_global_seq``), no collect beyond the
-# O(partitions) base frame, and bit-identical to the flat single-partition
-# window (asserted in tests/test_global_scan.py).
-# ---------------------------------------------------------------------------
-
-
-def _ordered_pid(df: DataFrame, order_cols) -> DataFrame:
+def _ordered_pid(df: DataFrame, order_cols,
+                 cached: list[DataFrame] | None = None) -> DataFrame:
     """Range-partition + sort ``df`` by ``order_cols`` (strings or sort
     Columns) and tag rows with the partition id. Persisted so the base-
-    offset pass and the finishing window see the identical partitioning."""
+    offset pass and the finishing pass see the identical partitioning; the
+    persisted frame is appended to ``cached`` when given, for the caller to
+    ``.unpersist()`` once the result is materialized, and otherwise stays
+    cached, and its plan with it, for the life of the session."""
     d = (df.repartitionByRange(*order_cols)
            .sortWithinPartitions(*order_cols)
-           .withColumn("_pid", F.spark_partition_id()))
-    return d.persist()
+           .withColumn("_pid", F.spark_partition_id())
+           .persist())
+    if cached is not None:
+        cached.append(d)
+    return d
 
 
 def _pid_base(d: DataFrame, val) -> DataFrame:
@@ -125,21 +82,25 @@ def with_global_running_sum(df: DataFrame, order_cols, val_col: str,
             .drop("_pid", "_base"))
 
 
-def with_global_rank(df: DataFrame, order_cols, out_col: str = "rank",
-                     start: int = 1) -> DataFrame:
-    """``row_number() OVER (ORDER BY ...)`` (as BIGINT, first row =
-    ``start``) without the single-partition sort. Order keys must be
-    unique for a deterministic result."""
-    from pyspark.sql import Window
-    d = _ordered_pid(df, order_cols)
+def with_global_seq(df: DataFrame, order_cols, seq_col: str = "seq",
+                    start: int = 0,
+                    cached: list[DataFrame] | None = None) -> DataFrame:
+    """``row_number() OVER (ORDER BY ...) - 1 + start`` as BIGINT: a dense
+    global index following ``order_cols`` (strings or sort Columns), the
+    first row numbered ``start``. Order keys must be unique for a
+    deterministic result. ``cached`` receives the persisted intermediate,
+    as in ``_ordered_pid``."""
+    d = _ordered_pid(df, order_cols, cached)
     base = _pid_base(d, F.lit(1))
-    lw = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (d.join(F.broadcast(base), "_pid")
-            .withColumn(out_col,
-                        (F.row_number().over(lw)
-                         + F.coalesce("_base", F.lit(0))
-                         + F.lit(start - 1)).cast("long"))
-            .drop("_pid", "_base"))
+    # read over the persisted frame, whose partitions are the sorted range
+    # partitions: the row's index within its partition
+    local = (F.monotonically_increasing_id()
+             - F.shiftleft(F.col("_pid").cast("long"), _MONO_ROW_BITS))
+    return (d.withColumn("_pos", local)
+            .join(F.broadcast(base), "_pid")
+            .withColumn(seq_col, (F.coalesce("_base", F.lit(0)) + F.col("_pos")
+                                  + F.lit(start)).cast("long"))
+            .drop("_pid", "_base", "_pos"))
 
 
 def with_global_lead(df: DataFrame, order_cols, lead_cols: list[str],
@@ -147,7 +108,7 @@ def with_global_lead(df: DataFrame, order_cols, lead_cols: list[str],
     """``lead(c) OVER (ORDER BY ...)`` for each c in ``lead_cols`` (null
     on the last row) without the single-partition sort: global dense rank,
     then a self-join on rank+1 — two bounded shuffles, never one task."""
-    r = with_global_rank(df, order_cols, "_glseq").persist()
+    r = with_global_seq(df, order_cols, "_glseq").persist()
     nxt = r.select((F.col("_glseq") - 1).alias("_glseq"),
                    *[F.col(c).alias(c + suffix) for c in lead_cols])
     return r.join(nxt, "_glseq", "left").drop("_glseq")

@@ -423,7 +423,7 @@ def q_corpus_epoch_shuffle(spark, sf_dir):
     permutation (restart-safe, no RNG state). Emitted for 2 epochs; the
     position is a per-epoch dense rank. A window PARTITIONED by epoch
     would still put one whole corpus in each partition (2 epochs = 2
-    tasks), so the rank is seq.with_global_rank over the epoch-major
+    tasks), so the rank is seq.with_global_seq over the epoch-major
     (epoch, shuffle_key) order — range-partitioned, never task-bounded
     by corpus size — and the per-epoch position falls out as
     global_rank − epoch·n_docs (epoch blocks are contiguous and all
@@ -433,9 +433,10 @@ def q_corpus_epoch_shuffle(spark, sf_dir):
         F.col("id").cast("int").alias("epoch")))
     key = F.md5(F.concat(F.col("epoch").cast("string"), F.lit("|"),
                          F.col("doc_id").cast("string")))
-    ranked = SEQ.with_global_rank(
+    ranked = SEQ.with_global_seq(
         eps.withColumn("shuffle_key", key),
-        [F.asc("epoch"), F.asc("shuffle_key"), F.asc("doc_id")], "_grk")
+        [F.asc("epoch"), F.asc("shuffle_key"), F.asc("doc_id")], "_grk",
+        start=1)
     nn = d.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     return (ranked.crossJoin(F.broadcast(nn))
             .withColumn("position",
@@ -1026,7 +1027,7 @@ def q_corpus_length_buckets(spark, sf_dir):
     formula), integer waste, ppm by integer DIV; batch assignment uses
     full deterministic tie-breaks (doc_id) on both engines.
 
-    Plan/scale: both ranks run through seq.with_global_rank (range-
+    Plan/scale: both ranks run through seq.with_global_seq (range-
     partition + per-partition base offsets — the registered plan IS
     the scale path now, no single-partition sort; round-4 verdict
     item #2); everything after the rank is a census groupBy."""
@@ -1038,7 +1039,7 @@ def q_corpus_length_buckets(spark, sf_dir):
     o_buck = [F.col("n_tok").asc(), F.col("doc_id").asc()]
 
     def batches(df, order, tag):
-        return (SEQ.with_global_rank(df, order, "rk")
+        return (SEQ.with_global_seq(df, order, "rk", start=1)
                 .withColumn("batch_id", F.expr("(rk - 1) DIV 32")
                             .cast("long"))
                 .groupBy("batch_id")
@@ -3227,7 +3228,7 @@ def q_corpus_sort_manifest(spark, sf_dir):
     Exactness: the rank is unique (doc_id tiebreak); min_by/max_by on
     the rank are deterministic in both engines; integer token counts.
 
-    Plan/scale: the global rank is seq.with_global_rank (range-
+    Plan/scale: the global rank is seq.with_global_seq (range-
     partition + per-partition offsets, no single-partition sort —
     files of one export range land in one task's range partition, the
     exact write pattern a sorted 100 TB export uses); the manifest is
@@ -3242,8 +3243,8 @@ def q_corpus_sort_manifest(spark, sf_dir):
                  TS.quality_score_expr(F.col("text")).alias("quality"),
                  F.size(F.split("text", " ")).cast("long")
                  .alias("n_tokens")))
-    ranked = SEQ.with_global_rank(
-        d, [F.desc("quality"), F.asc("doc_id")], "rk")
+    ranked = SEQ.with_global_seq(
+        d, [F.desc("quality"), F.asc("doc_id")], "rk", start=1)
     return (ranked.withColumn("file_id",
                               F.expr("(rk - 1) DIV 100").cast("long"))
             .groupBy("file_id")

@@ -1120,13 +1120,13 @@ def q_embeddings_distance_histogram(spark, sf_dir):
 
     Plan/scale: the pair join is rank-to-rank (one equi-join after
     a zip-rank), O(n) pairs, never all-pairs; the histogram is one
-    20-group census. The rank comes from seq.with_global_rank over
+    20-group census. The rank comes from seq.with_global_seq over
     the ID COLUMN ALONE (no single-partition sort, and the vector
     payload never rides through the rank shuffle — round-4 verdict
     item #1); vectors join back by vec_id."""
     emb = _t(spark, sf_dir, "embeddings")
-    ranked = SEQ.with_global_rank(emb.select("vec_id"),
-                                  [F.asc("vec_id")], "rnk", start=0)
+    ranked = SEQ.with_global_seq(emb.select("vec_id"),
+                                 [F.asc("vec_id")], "rnk")
     n = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = ranked.crossJoin(F.broadcast(n)) \
         .withColumn("mate", (F.col("rnk") * 7 + 1) % F.col("n"))
@@ -1297,7 +1297,7 @@ def q_embeddings_align_uniformity(spark, sf_dir):
     Plan/scale: two rank-pair joins (O(n) pairs each, never
     all-pairs) + two 1-row aggs, emitted as a 2-row metric frame.
     Both pair builders run over the NARROW (vec_id[, label]) frame —
-    the rank via seq.with_global_rank (no single-partition sort;
+    the rank via seq.with_global_seq (no single-partition sort;
     round-4 verdict item #1) — and the d2 kernel joins vectors back
     by id."""
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label",
@@ -1307,8 +1307,8 @@ def q_embeddings_align_uniformity(spark, sf_dir):
            .withColumn("mate", F.lead("vec_id").over(wl))
            .filter(F.col("mate").isNotNull())
            .select("vec_id", "mate"))
-    ranked = SEQ.with_global_rank(emb.select("vec_id"),
-                                  [F.asc("vec_id")], "rnk", start=0)
+    ranked = SEQ.with_global_seq(emb.select("vec_id"),
+                                 [F.asc("vec_id")], "rnk")
     n = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
     perm = (ranked.crossJoin(F.broadcast(n))
             .withColumn("mate_rnk", (F.col("rnk") * 7 + 1) % F.col("n"))

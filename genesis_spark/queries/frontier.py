@@ -1308,10 +1308,11 @@ def q_frontier_wfq(spark, sf_dir):
     (vfinish, host, url_id) tie-break.
 
     Plan/scale: one host-partitioned window (the politeness shuffle),
-    then the global slot rank via operators/seq.with_global_rank —
+    then the global slot rank via operators/seq.with_global_seq —
     range-partition on (vfinish, host, url_id), O(partitions) base
-    offsets, pid-partitioned row_number — so no single-partition
-    window ever sees the frontier (round-4 verdict item #1)."""
+    offsets plus each row's position in its range partition — so no
+    single-partition window ever sees the frontier (round-4 verdict
+    item #1)."""
     k = F.col("o_orderkey")
     h = k % 15
     items = _t(spark, sf_dir, "orders").select(
@@ -1333,9 +1334,10 @@ def q_frontier_wfq(spark, sf_dir):
                      .cast("long")))
     slim = x.select("host", "url_id", "weight", "arrival",
                     "cost_scaled", "vfinish")
-    return (SEQ.with_global_rank(
+    return (SEQ.with_global_seq(
                 slim,
-                [F.asc("vfinish"), F.asc("host"), F.asc("url_id")], "slot")
+                [F.asc("vfinish"), F.asc("host"), F.asc("url_id")], "slot",
+                start=1)
             .select("host", "url_id", "weight", "arrival", "cost_scaled",
                     "vfinish", "slot"))
 

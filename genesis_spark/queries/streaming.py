@@ -1004,7 +1004,8 @@ WITH ev AS (
 ),
 grid AS (
   SELECT event_type, wm_s, count(*) AS n,
-         sum(CASE WHEN delay_s > wm_s THEN 1 ELSE 0 END) AS n_late
+         CAST(sum(CASE WHEN delay_s > wm_s THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_late
   FROM ev CROSS JOIN (SELECT unnest([10, 30, 60, 120, 300, 900]) AS wm_s)
   GROUP BY event_type, wm_s
 ),

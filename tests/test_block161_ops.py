@@ -7,11 +7,13 @@ import hashlib
 import math
 from collections import defaultdict
 
+import duckdb
 import pytest
 
 pytestmark = pytest.mark.block
 
-from genesis_spark.queries import (q_cdx_collapse, q_feed_poll_schedule,
+from genesis_spark.queries import (ORACLE_STREAM_WATERMARK_PLAN,
+                                   q_cdx_collapse, q_feed_poll_schedule,
                                    q_stream_watermark_plan)
 
 SF = "/root/testdata/sf0.001"
@@ -92,3 +94,18 @@ def test_watermark_plan_replay(spark):
             (n, p95, chosen, late_at), t
     # the plan must actually differentiate: types choose DIFFERENT delays
     assert len({r.chosen_wm_s for r in got.values()}) >= 3
+
+
+def test_watermark_plan_oracle_types(spark):
+    """The DuckDB oracle's columns have the Spark row's types: a HUGEINT
+    sum would hash differently from Spark's BIGINT."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"'{SF}/events.parquet'")
+    rel = con.sql(ORACLE_STREAM_WATERMARK_PLAN)
+    duck = {"VARCHAR": "string", "BIGINT": "bigint", "INTEGER": "int"}
+    got = [(c, duck.get(str(t), str(t))) for c, t in zip(rel.columns,
+                                                          rel.types)]
+    want = [(f.name, f.dataType.simpleString()) for f in
+            q_stream_watermark_plan(spark, SF).schema.fields]
+    assert got == want

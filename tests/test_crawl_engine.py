@@ -22,7 +22,10 @@ def fixture_dir():
 def result(spark, fixture_dir):
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    return engine.run(spark, seeds, pages)
+    res = engine.run(spark, seeds, pages)
+    yield res
+    for df in res["_cached"]:
+        df.unpersist()
 
 
 def test_crawl_order_exact(result, fixture_dir):
@@ -73,7 +76,8 @@ def test_bloom_prefilter_path_identical(spark, fixture_dir):
     anti-join; no false negatives -> identical crawl order and seen set."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    frontier = engine.install_seeds(seeds, 8)
+    installed = []
+    frontier = engine.install_seeds(seeds, 8, cached=installed)
     res = engine.crawl_frontier(spark, frontier, pages, use_bloom=True)
     golden = pq.read_table(f"{fixture_dir}/crawl_order_golden.parquet") \
         .to_pylist()
@@ -84,25 +88,8 @@ def test_bloom_prefilter_path_identical(spark, fixture_dir):
     g_seen = {r["url"] for r in
               pq.read_table(f"{fixture_dir}/seen_golden.parquet").to_pylist()}
     assert {r.url for r in res["seen"].collect()} == g_seen
-
-
-def test_cuckoo_prefilter_path_identical(spark, fixture_dir):
-    """With use_cuckoo=True the cuckoo-filter prefilter fronts the exact
-    anti-join (the D1 'Bloom/cuckoo' second variant); no false negatives ->
-    identical crawl order and seen set."""
-    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
-    pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    frontier = engine.install_seeds(seeds, 8)
-    res = engine.crawl_frontier(spark, frontier, pages, use_cuckoo=True)
-    golden = pq.read_table(f"{fixture_dir}/crawl_order_golden.parquet") \
-        .to_pylist()
-    got = [r.asDict() for r in res["crawl_order"]
-           .select("crawl_seq", "round", "host_key", "url", "depth",
-                   "attempts", "ok").orderBy("crawl_seq").collect()]
-    assert got == golden
-    g_seen = {r["url"] for r in
-              pq.read_table(f"{fixture_dir}/seen_golden.parquet").to_pylist()}
-    assert {r.url for r in res["seen"].collect()} == g_seen
+    for df in installed + res["_cached"]:
+        df.unpersist()
 
 
 def test_score_coverage(result):
@@ -156,9 +143,6 @@ def test_run_rounds_leaves_no_cached_data(spark, fixture_dir, tmp_path):
     numbering's intermediate and the frontier re-read after each round."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    # Spark caches by plan: an identical plan left cached by an earlier
-    # test would be shared with the crawl, and released by it
-    spark.catalog.clearCache()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     for bucketed in (True, False):

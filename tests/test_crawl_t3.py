@@ -5,7 +5,7 @@ full-table rewrite), and the sharded Bloom seen-prefilter — plus a
 mid-crawl crash/resume.
 
 Golden-exactness under bucketed install is the established contract
-(engine.install_seeds_scaled docstring): seen set, documents, per-host
+(engine.install_seeds_bucketed docstring): seen set, documents, per-host
 crawl order, and final frontier states are identical to the oracle's
 global-order goldens; only cross-host crawl_seq interleaving differs.
 """

@@ -1,17 +1,20 @@
-"""Pure-JVM global scans (operators/seq round-5 additions): each must be
-bit-identical to the flat single-partition window it replaces, and its
-physical plan must contain NO unpartitioned window over the base rows
-(only the O(partitions) per-pid aggregate may feed one).
+"""Pure-JVM global scans (operators/seq): each must be bit-identical to
+the flat single-partition window it replaces, and its physical plan must
+contain NO unpartitioned window over the base rows (only the
+O(partitions) per-pid aggregate may feed one) and no Python node.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from genesis_spark.operators.seq import (with_global_lead,
-                                         with_global_rank,
-                                         with_global_running_sum)
+                                         with_global_running_sum,
+                                         with_global_seq)
+
+AQE = "spark.sql.adaptive.enabled"
 
 
 def _frame(spark, n=500):
@@ -62,16 +65,43 @@ def test_running_sum_all_null_partitions(spark):
     assert got == flat
 
 
-def test_rank_matches_row_number(spark):
+@pytest.fixture(params=["true", "false"], ids=["aqe_on", "aqe_off"])
+def aqe(spark, request):
+    prev = spark.conf.get(AQE)
+    spark.conf.set(AQE, request.param)
+    yield request.param
+    spark.conf.set(AQE, prev)
+
+
+def test_rank_matches_row_number(spark, aqe):
     df = _frame(spark)
+    order = [F.desc("v"), F.asc("k")]
     flat = {r["k"]: r["rn"] for r in
             df.withColumn("rn", F.row_number().over(
-                Window.orderBy(F.desc("v"), F.asc("k")))).collect()}
-    got = {r["k"]: r["rn"] for r in
-           with_global_rank(df, [F.desc("v"), F.asc("k")], "rn").collect()}
-    assert got == flat
-    z = with_global_rank(df, ["k"], "rn", start=0)
-    assert z.agg(F.min("rn")).collect()[0][0] == 0
+                Window.orderBy(*order))).collect()}
+    for start in (0, 1):
+        got = {r["k"]: r["rn"] for r in
+               with_global_seq(df, order, "rn", start=start).collect()}
+        assert got == {k: rn - 1 + start for k, rn in flat.items()}, start
+
+
+def test_global_seq_plan_has_no_python(spark):
+    plan = with_global_seq(_frame(spark), ["k"], "rn") \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
+
+
+def test_global_seq_releases_cached(spark):
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    cached = []
+    assert with_global_seq(_frame(spark, 300), ["k"], "rn",
+                           cached=cached).count() == 300
+    assert len(cached) == 1 and persistent().size() == before + 1
+    for df in cached:
+        df.unpersist()
+    assert persistent().size() == before
 
 
 def test_lead_matches_flat_lead(spark):
@@ -89,7 +119,7 @@ def test_empty_and_single_row(spark):
     empty = spark.range(0).select(F.col("id").alias("k"),
                                   F.col("id").alias("v"))
     assert with_global_running_sum(empty, ["k"], "v", "rs").count() == 0
-    assert with_global_rank(empty, ["k"], "rn").count() == 0
+    assert with_global_seq(empty, ["k"], "rn").count() == 0
     one = spark.range(1).select(F.col("id").alias("k"),
                                 F.lit(7).alias("v"))
     row = with_global_running_sum(one, ["k"], "v", "rs").collect()[0]

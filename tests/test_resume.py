@@ -173,17 +173,17 @@ def test_expire_snapshots_removes_dead_only(spark, tmp_path):
         frontier_before
 
 
-def test_cuckoo_delta_state_run_equals_golden(spark, tmp_path_factory):
-    """Composition: use_cuckoo + delta_state through run_rounds must still
-    reproduce the golden crawl order exactly (the cuckoo prefilter changes
+def test_bloom_delta_state_run_equals_golden(spark, tmp_path_factory):
+    """Composition: use_bloom + delta_state through run_rounds must still
+    reproduce the golden crawl order exactly (the Bloom prefilter changes
     the plan, never the result; delta-state changes the storage layout,
     never the state)."""
     fx = ensure("t1")
     seeds = spark.read.parquet(f"{fx}/seeds.parquet")
     pages = spark.read.parquet(f"{fx}/web_pages.parquet")
-    store = SnapshotStore(str(tmp_path_factory.mktemp("ckd") / "crawl"))
+    store = SnapshotStore(str(tmp_path_factory.mktemp("bld") / "crawl"))
     engine.run_rounds(spark, seeds, pages, store, delta_state=True,
-                      use_cuckoo=True)
+                      use_bloom=True)
     golden = pq.read_table(f"{fx}/crawl_order_golden.parquet").to_pylist()
     got = [r.asDict() for r in
            store.read(spark, "crawl_order")

@@ -25,7 +25,7 @@ plan at [sf_dir] and grade it against the engine's hot-path rules:
   the window's input is pre-aggregated or top-k-pruned) or reaches only
   literal-bounded leaves, or the row is in WINDOW_SANCTIONED below with
   a justification. The scale-safe alternative for base-scale data is
-  ``operators/seq.with_global_running_sum`` / ``with_global_rank`` /
+  ``operators/seq.with_global_running_sum`` / ``with_global_seq`` /
   ``with_global_lead``.
 
 Writes PLAN_AUDIT.md (one row per query) and exits non-zero on any FAIL.
@@ -41,10 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # rows whose plans legitimately carry Arrow-batched Python, and why
 PANDAS_SANCTIONED = {
-    "frontier_install": "with_global_seq dense numbering (offset + local "
-                        "position over Arrow batches — operators/seq.py; "
-                        "the non-serializing alternative to a global "
-                        "single-partition window)",
     "leak_dispatch": "per-site HTML card extraction (real parser kernels)",
     "leak_dispatch2": "per-site HTML card extraction",
     "leak_dispatch3": "per-site HTML card extraction",
