@@ -68,8 +68,7 @@ BLOOM_BITS_PER_SHARD = 1 << 20  # 128 KiB/shard bitmap at local scale
 BLOOM_NUM_HASHES = 5
 BLOOM_BROADCAST_MAX_BYTES = 1 << 26   # 64 MB: above this the filter is not
                                       # broadcast (flag-all-maybe fallback →
-                                      # exact anti-join); use the shard-routed
-                                      # probe (filter_not_seen_routed) instead
+                                      # exact anti-join)
 # Sizing at 10^10 keys: slots_total ~= keys/0.95 -> ~2^34 slots = ~21 GB
 # of fingerprint tables; keep shards at 128 KiB-16 MB each and scale
 # CUCKOO_SHARDS (e.g. 2^12 shards x 2^19 buckets x 4 slots ~= 2^33 slots

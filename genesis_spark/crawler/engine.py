@@ -13,10 +13,14 @@ Replaces the reference's Mongo frontier + Celery per-host tasks
            depth-stratified FIFO)
 
 Every stage is DataFrame-native: fetch = equi-join against ``web_pages``
-(J4), URL-seen dedup = left_anti join per task (J2, exact truth; the Bloom
-prefilter in operators/bloom.py is an optional bandwidth saver), ordering =
+(J4), URL-seen dedup = the exact left_anti join per task (J2), ordering =
 window functions + the scalable global-sequence operator. The only Python is
 the Arrow-batched parse kernel.
+
+State lives in a snapshot store in one layout: the install writes
+``frontier_base`` once, each round appends the state changes of the seeds
+it dispatched as ``frontier_updates``, and ``read_frontier_delta`` joins
+the two back into the current frontier.
 """
 
 from __future__ import annotations
@@ -29,7 +33,6 @@ from pyspark.sql import functions as F
 from genesis_spark import conf
 from genesis_spark.functions import urls as U
 from genesis_spark.functions.parse import parse_pages
-from genesis_spark.operators import bloom
 from genesis_spark.operators.seq import with_global_seq
 
 # is_uri_validator (helper_method.py:187-192): scheme + non-empty netloc.
@@ -132,16 +135,15 @@ _PASSTHROUGH = ["task_id", "host_rank", "round", "host_key", "depth", "pos"]
 
 def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
                    max_depth: int = conf.MAX_ALLOWED_DEPTH,
-                   seq_offset: int = 0,
-                   use_bloom: bool = False) -> dict[str, DataFrame]:
+                   seq_offset: int = 0) -> dict[str, DataFrame]:
     """Crawl every frontier host to completion; returns crawl_order / seen /
     documents / frontier_done DataFrames matching the oracle goldens.
 
     ``seq_offset`` shifts crawl_seq for multi-round incremental runs.
-    ``use_bloom`` puts the sharded Bloom prefilter (D1 north-star) in front
-    of the exact URL-seen anti-join: candidates the filter proves unseen
-    skip the shuffle; possible-positives still go through the join, so
-    results are identical either way (no false negatives by construction).
+    Link admission is the exact per-task anti-join against ``seen``, which
+    starts empty here and holds only this call's admissions: it is bounded
+    by one round's links, never by the frontier, so no prefilter in front
+    of the join would save it work.
     """
     pages_j = pages.select(
         F.col("url_hash").alias("p_hash"), F.col("url").alias("p_url"),
@@ -154,9 +156,6 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
     order_waves: list[DataFrame] = []
     doc_waves: list[DataFrame] = []
     cached: list[DataFrame] = []
-    if use_bloom:
-        seen_filt = bloom.ShardedBloom.empty()
-    seen_key = F.concat_ws("\x1f", F.col("task_id").cast("string"), "url")
 
     for d in range(max_depth + 1):
         fetched = wave.join(
@@ -190,18 +189,8 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
             F.posexplode("sub_url").alias("link_pos", "url"))
         # per-task URL-seen: exact left_anti (J2/D1) + first-occurrence in
         # (parent_pos, link_pos) order — identical to insert-on-admission
-        if use_bloom:
-            flagged = bloom.filter_not_seen(
-                kids.withColumn("_k", seen_key), "_k", seen_filt).drop("_k")
-            surely_new = flagged.filter(~F.col("_maybe_seen")) \
-                .drop("_maybe_seen")
-            maybe = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-            fresh = surely_new.unionByName(
-                maybe.join(seen.select("task_id", "url"),
-                           ["task_id", "url"], "left_anti"))
-        else:
-            fresh = kids.join(seen.select("task_id", "url"),
-                              ["task_id", "url"], "left_anti")
+        fresh = kids.join(seen.select("task_id", "url"),
+                          ["task_id", "url"], "left_anti")
         w_first = Window.partitionBy("task_id", "url").orderBy(
             "parent_pos", "link_pos")
         admitted = (fresh.withColumn("_rn", F.row_number().over(w_first))
@@ -214,12 +203,6 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
                 .persist())
         cached.append(wave)
         seen = seen.unionByName(wave.select("task_id", "url", "host_key"))
-        if use_bloom:
-            # incremental: hash only THIS wave's admissions into the filter
-            # (a from-scratch rebuild would re-hash the whole seen set every
-            # wave — O(total rows) per wave instead of O(new rows))
-            seen_filt = seen_filt.union(
-                bloom.build_bloom(wave.select(seen_key.alias("_k")), "_k"))
 
     all_rows = order_waves[0]
     for w in order_waves[1:]:
@@ -331,7 +314,7 @@ def _adaptive_off(crawl):
 def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
                store, host_budget: int = conf.WAVE_HOST_BUDGET,
                stop_after_round: int | None = None,
-               delta_state: bool = False,
+               delta_state: bool = True,
                bucketed: bool = False,
                use_bloom: bool = False,
                compact_every: int | None = None) -> None:
@@ -341,19 +324,22 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     invisible (rename-atomic manifests). ``stop_after_round`` simulates a
     crash after committing that round (tests §5.4).
 
-    ``delta_state=True`` is the 10^10-row layout: the frontier is written
-    ONCE (``frontier_base``) and each round commits only the delta of
-    state changes for the seeds it dispatched (``frontier_updates``) —
-    O(round size), instead of rewriting the full frontier table every
-    round (O(frontier) rewrite amplification: at 10^10 rows a full
-    rewrite per round dwarfs the crawl itself). Reads reconstruct via
-    ``read_frontier_delta``; resume semantics are identical (pinned by
-    tests/test_resume.py::test_delta_state_resume_and_no_rewrite).
+    The frontier is written ONCE (``frontier_base``) and each round commits
+    only the state changes of the seeds it dispatched
+    (``frontier_updates``): O(round size), never a rewrite of the whole
+    frontier per round, which at 10^10 rows would dwarf the crawl itself.
+    Reads reconstruct it via ``read_frontier_delta``. ``compact_every=n``
+    folds the update log into a fresh ``frontier_base`` after every n-th
+    round (``compact_frontier``), so the reconstruction stays one join
+    deep. ``bucketed`` selects the production-scale install (no
+    global-rank barrier), as in ``run``.
 
-    ``bucketed``/``use_bloom`` select the production-scale install (no
-    global-rank barrier) and the sharded Bloom seen-prefilter — the same
-    flags as ``run``/``crawl_frontier``; the three 10^10-row paths
-    compose (pinned at t3 scale by tests/test_crawl_t3.py).
+    ``delta_state`` and ``use_bloom`` are retired and select nothing; they
+    stay only because the crawl benchmark passes them, and go with its next
+    change. ``delta_state=False`` asked for the full-rewrite ``frontier``
+    table, which no longer exists, so it raises ``ValueError`` before the
+    store is read. ``use_bloom`` is ignored: admission is always the exact
+    anti-join (``crawl_frontier``), which the Bloom prefilter never changed.
 
     The whole call, install and resume read included, runs with
     ``spark.sql.adaptive.enabled=false``; the session's value is restored
@@ -370,20 +356,22 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     about a third more CPU than with AQE. ``install_seeds*`` and
     ``crawl_frontier`` called directly, and the query registry, keep the
     session's AQE."""
+    if not delta_state:
+        raise ValueError("delta_state=False is retired: the frontier is "
+                         "kept only as frontier_base + frontier_updates")
     latest = store.latest()
     if latest is None:
         installed: list[DataFrame] = []
         frontier = (install_seeds_bucketed(seeds, host_budget) if bucketed
                     else install_seeds(seeds, host_budget, cached=installed)
                     ).persist()
-        base_name = "frontier_base" if delta_state else "frontier"
-        store.commit({base_name: frontier}, {"round": -1, "seq_offset": 0})
+        store.commit({"frontier_base": frontier},
+                     {"round": -1, "seq_offset": 0})
         for df in installed:
             df.unpersist()
         next_round, seq_offset = 0, 0
     else:
-        frontier = (read_frontier_delta(spark, store) if delta_state
-                    else store.read(spark, "frontier")).persist()
+        frontier = read_frontier_delta(spark, store).persist()
         next_round = latest["round"] + 1
         seq_offset = latest["seq_offset"]
 
@@ -394,24 +382,8 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     for r in range(next_round, max_round + 1):
         todo = frontier.filter((F.col("round") == r) &
                                (F.col("state") == "pending"))
-        res = crawl_frontier(spark, todo, pages, seq_offset=seq_offset,
-                             use_bloom=use_bloom)
+        res = crawl_frontier(spark, todo, pages, seq_offset=seq_offset)
         seq_offset += res["crawl_order"].count()
-        upd = res["frontier_done"].select(
-            "url_hash", F.col("state").alias("_new_state"),
-            F.col("fail_count").alias("_new_fails"))
-        if delta_state:
-            new_frontier = None
-            delta = res["frontier_done"].select("url_hash", "state",
-                                                "fail_count")
-        else:
-            new_frontier = (frontier.join(upd, "url_hash", "left")
-                            .withColumn("state",
-                                        F.coalesce("_new_state", "state"))
-                            .withColumn("fail_count",
-                                        F.coalesce("_new_fails",
-                                                   "fail_count"))
-                            .drop("_new_state", "_new_fails")).persist()
         # per-partition fetch/parse metrics (S12/ST4): politeness bucket ==
         # fetch partition, so (round, depth, bucket) rows are partition-level
         # lineage for this snapshot
@@ -430,25 +402,21 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
             "documents": res["documents"].drop("task_id", "host_rank", "pos",
                                                "round"),
             "metrics": metrics,
+            # O(round), not O(frontier)
+            "frontier_updates": res["frontier_done"].select(
+                "url_hash", "state", "fail_count"),
         }
-        if delta_state:
-            tables["frontier_updates"] = delta      # O(round), not O(frontier)
-        else:
-            tables["frontier"] = new_frontier
         store.commit(tables, {"round": r, "seq_offset": seq_offset})
-        if delta_state and compact_every and (r + 1) % compact_every == 0:
+        if compact_every and (r + 1) % compact_every == 0:
             compact_frontier(spark, store)          # bounded update-log depth
         for df in res["_cached"]:
             df.unpersist()
         frontier.unpersist()
-        if new_frontier is not None:
-            new_frontier.unpersist()
         if r == max_round or (stop_after_round is not None
                               and r >= stop_after_round):
             return
         # re-read from the committed snapshot: every round starts from a flat
         # parquet scan, never a lineage chain through all prior rounds'
         # crawl plans (which grows the DAG superlinearly)
-        frontier = (read_frontier_delta(spark, store) if delta_state
-                    else store.read(spark, "frontier")).persist()
+        frontier = read_frontier_delta(spark, store).persist()
     frontier.unpersist()        # resumed after the last round: nothing to do

@@ -15,21 +15,14 @@ Python side only does numpy bitmap arithmetic on int64 arrays — no per-row
 Python anywhere in build or probe.
 
 Sharding: ``shard = h1 % n_shards`` — each shard is an independent bitmap.
-Membership tests use double hashing ``g_i = h1 + i*h2``. Two probe paths:
-
-* broadcast (``build_bloom`` + ``filter_not_seen``): shard bitmaps
-  OR-merged on the driver and broadcast whole — right up to
-  conf.BLOOM_BROADCAST_MAX_BYTES, beyond which it degrades to
-  flag-everything-maybe (the exact anti-join downstream stays the truth);
-* shard-routed (``build_bloom_shards`` + ``filter_not_seen_routed``): the
-  filter stays a (shard, bitmap) DataFrame, candidates cogroup to their
-  shard's partition, and each task holds exactly ONE bitmap — the 10^10-key
-  path, where the full filter (~12 GB at 10 bits/key) could never broadcast.
-
-``ShardedBloom.union`` merges two filters with identical parameters, so a
-multi-wave crawl builds the filter INCREMENTALLY (one small build per wave
-over just that wave's new keys) instead of rehashing the full seen set
-every wave.
+Membership tests use double hashing ``g_i = h1 + i*h2``. ``build_bloom``
+builds the shard bitmaps distributed and OR-merges them on the driver;
+``filter_not_seen`` broadcasts the whole filter up to
+conf.BLOOM_BROADCAST_MAX_BYTES, beyond which it degrades to
+flag-everything-maybe (the exact anti-join downstream stays the truth).
+The crawl itself admits links with the exact anti-join alone
+(``crawler/engine.py``): one round's seen set is too small for a prefilter
+to pay for its build.
 """
 
 from __future__ import annotations
@@ -91,23 +84,6 @@ class ShardedBloom:
         """Resident size of all shard bitmaps (the broadcast payload)."""
         return sum(bm.nbytes for bm in self.shards.values())
 
-    def union(self, other: "ShardedBloom") -> "ShardedBloom":
-        """OR-merge two filters with identical parameters (incremental
-        multi-wave build: union in a small filter over each wave's new keys
-        instead of rebuilding from the full seen set)."""
-        assert (self.n_bits, self.k, self.n_shards) == \
-            (other.n_bits, other.k, other.n_shards), "bloom params differ"
-        shards = dict(self.shards)
-        for sid, bm in other.shards.items():
-            shards[sid] = (shards[sid] | bm) if sid in shards else bm
-        return ShardedBloom(shards, self.n_bits, self.k, self.n_shards)
-
-    @classmethod
-    def empty(cls, n_shards: int = conf.BLOOM_SHARDS,
-              n_bits: int = conf.BLOOM_BITS_PER_SHARD,
-              k: int = conf.BLOOM_NUM_HASHES) -> "ShardedBloom":
-        return cls({}, n_bits, k, n_shards)
-
 
 def build_bloom(df: DataFrame, key_col: str,
                 n_shards: int = conf.BLOOM_SHARDS,
@@ -159,10 +135,7 @@ def filter_not_seen(df: DataFrame, key_col: str, bloom: ShardedBloom,
     Size-capped: if the filter exceeds ``max_broadcast_bytes`` (default
     conf.BLOOM_BROADCAST_MAX_BYTES) it is NOT broadcast — every row is
     flagged maybe-seen instead, which degrades gracefully to the exact
-    anti-join (the source of truth) at the caller. At 10^10 keys the
-    full bitmap set is ~12 GB and unbroadcastable; use the shard-routed
-    ``filter_not_seen_routed`` + ``build_bloom_shards`` path there, which
-    never materializes the whole filter anywhere."""
+    anti-join (the source of truth) at the caller."""
     if max_broadcast_bytes is None:
         max_broadcast_bytes = conf.BLOOM_BROADCAST_MAX_BYTES
     if bloom.total_bytes() > max_broadcast_bytes:
@@ -186,106 +159,3 @@ def filter_not_seen(df: DataFrame, key_col: str, bloom: ShardedBloom,
             yield pdf
 
     return _hash_cols(df, key_col).mapInPandas(apply, schema)
-
-
-# ---------------------------------------------------------------------------
-# Shard-routed path (10^10-key scale): the filter never leaves the cluster
-# ---------------------------------------------------------------------------
-
-def build_bloom_shards(df: DataFrame, key_col: str,
-                       n_shards: int = conf.BLOOM_SHARDS,
-                       n_bits: int = conf.BLOOM_BITS_PER_SHARD,
-                       k: int = conf.BLOOM_NUM_HASHES) -> DataFrame:
-    """Distributed build that STAYS distributed: per-partition partial
-    bitmaps (same numpy kernel as ``build_bloom``) OR-merged per shard with
-    a groupBy — one (shard, bitmap) row per shard, no driver collect and no
-    whole-filter object anywhere. Persist or checkpoint the result when
-    probing multiple waves. Requires power-of-two ``n_shards`` so the JVM
-    ``pmod(xxhash64, n_shards)`` routing in the probe agrees with the
-    unsigned numpy ``h1 % n_shards`` used here (2^64 % n == 0)."""
-    assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of two"
-    n_bytes = n_bits // 8
-
-    def partial(batches):
-        local: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            h1 = pdf[_H1_COL].to_numpy(dtype=np.int64).astype(np.uint64)
-            h2 = pdf[_H2_COL].to_numpy(dtype=np.int64).astype(np.uint64)
-            shard_ids = h1 % np.uint64(n_shards)
-            pos = _positions(h1, h2, n_bits, k)
-            for sid in np.unique(shard_ids):
-                bm = local.setdefault(int(sid),
-                                      np.zeros(n_bytes, dtype=np.uint8))
-                p = pos[shard_ids == sid].ravel()
-                np.bitwise_or.at(bm, p >> 3, (1 << (p & 7)).astype(np.uint8))
-        yield pd.DataFrame({
-            "shard": pd.Series(list(local.keys()), dtype="int32"),
-            "bitmap": [bm.tobytes() for bm in local.values()],
-        })
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(n_bytes, dtype=np.uint8)
-        for b in pdf["bitmap"]:
-            acc |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame({"shard": pdf["shard"].iloc[:1],
-                             "bitmap": [acc.tobytes()]})
-
-    hashed = _hash_cols(df.select(key_col).na.drop(), key_col) \
-        .select(_H1_COL, _H2_COL)
-    partials = hashed.mapInPandas(partial, "shard int, bitmap binary")
-    return partials.groupBy("shard").applyInPandas(
-        merge, "shard int, bitmap binary")
-
-
-def filter_not_seen_routed(df: DataFrame, key_col: str, shard_df: DataFrame,
-                           n_shards: int = conf.BLOOM_SHARDS,
-                           n_bits: int = conf.BLOOM_BITS_PER_SHARD,
-                           k: int = conf.BLOOM_NUM_HASHES,
-                           flag_col: str = "_maybe_seen",
-                           shard_rows_counter=None) -> DataFrame:
-    """Shard-routed probe: candidates are shuffled to their shard's
-    partition (cogroup on ``pmod(h1, n_shards)``) and each task tests ONE
-    shard's bitmap against that shard's candidates — per-task memory is one
-    bitmap (n_bits/8 bytes), never the whole filter, so the probe works at
-    filter sizes that could never broadcast (SURVEY D1's per-bucket-shard
-    promise). One extra shuffle of the candidate rows vs the broadcast
-    path; the exact anti-join downstream remains the source of truth.
-
-    ``shard_rows_counter``: optional accumulator, incremented by the number
-    of bitmap rows each group task receives (tests prove = 1 per shard)."""
-    assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of two"
-    from pyspark.sql import types as T
-
-    hashed = _hash_cols(df, key_col).withColumn(
-        "_bshard", F.pmod(F.col(_H1_COL), F.lit(n_shards)).cast("int"))
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(flag_col, T.BooleanType(),
-                                                False)])
-    drop_cols = [_H1_COL, _H2_COL, "_bshard"]
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if shard_rows_counter is not None:
-            shard_rows_counter.add(len(right))
-        if len(right) > 1:
-            raise ValueError("bloom shard routing delivered >1 bitmap row "
-                             "to one group — shard ids collide")
-        if len(left) == 0:
-            return left.drop(columns=drop_cols).assign(
-                **{flag_col: pd.Series([], dtype=bool)})
-        h1 = left[_H1_COL].to_numpy(dtype=np.int64).astype(np.uint64)
-        h2 = left[_H2_COL].to_numpy(dtype=np.int64).astype(np.uint64)
-        out = left.drop(columns=drop_cols)
-        if len(right) == 0:
-            out[flag_col] = False        # empty shard: definitely unseen
-            return out
-        bitmap = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-        pos = _positions(h1, h2, n_bits, k)
-        bits = bitmap[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)
-        out[flag_col] = (bits != 0).all(axis=1)
-        return out
-
-    return (hashed.groupBy("_bshard")
-            .cogroup(shard_df.groupBy(F.col("shard").alias("_bshard")))
-            .applyInPandas(probe, schema))

@@ -831,8 +831,8 @@ FROM j
 
 def q_seen_bloom_sizing(spark, sf_dir):
     """Bloom URL-seen SHARD capacity planning — the ops row behind the
-    north-star's partitioned Bloom filter (operators/bloom.py shard
-    routing): per shard, the achieved false-positive rate of the current
+    north-star's partitioned Bloom filter (operators/bloom.py): per
+    shard, the achieved false-positive rate of the current
     fixed allocation and the power-of-two reallocation that restores the
     1% target. Hosts follow the hub-plus-tail split (hub keys collapse
     into shards 0-6, doubling their load) so the skew actually drives

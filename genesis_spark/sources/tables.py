@@ -10,11 +10,11 @@ module provides the same API surface over plain parquet directories:
                                          tables, **meta (round, seq_offset)}
       ...
 
-* append-style tables (crawl_order/seen/documents/metrics) commit only the
-  round's delta — a read unions every committed snapshot's delta (Iceberg
-  manifest-list semantics, minus compaction);
-* state-style tables (frontier) commit the full small table each round — a
-  read takes the latest version only.
+* append-style tables (crawl_order/seen/documents/metrics/frontier_updates)
+  commit only the round's delta — a read unions every committed snapshot's
+  delta since the last compaction cut (Iceberg manifest-list semantics);
+* state-style tables (frontier_base) are committed whole, at install and at
+  each frontier compaction — a read takes the latest version only.
 
 Commits are atomic via write-to-temp + rename of the manifest; a crashed
 round leaves no manifest and is invisible to readers, so resume restarts
@@ -31,11 +31,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-# state-style: read latest version only. frontier_base is the delta-state
-# layout's install-time table (engine.read_frontier_delta): written once,
-# never rewritten — per-round state changes land as frontier_updates
-# APPEND deltas instead of a full-frontier rewrite per round.
-STATE_TABLES = {"frontier", "frontier_base"}
+# state-style: read latest version only. frontier_base is the crawl's
+# frontier as installed or last compacted (engine.read_frontier_delta);
+# per-round state changes land as frontier_updates APPEND deltas, never a
+# rewrite of the whole frontier per round.
+STATE_TABLES = {"frontier_base"}
 
 
 class SnapshotStore:
@@ -113,25 +113,21 @@ class SnapshotStore:
         return spark.read.parquet(*paths)
 
     # -- maintenance (the Iceberg compaction/expiry shape) --------------------
-    def compact(self, spark: SparkSession, table: str,
-                df: DataFrame | None = None, extra_meta: dict | None = None) -> int:
-        """Fold every committed contribution of ``table`` into ONE
-        consolidated rewrite committed as a new snapshot carrying the
+    def compact(self, spark: SparkSession, table: str) -> int:
+        """Fold every committed contribution of append table ``table`` into
+        ONE consolidated rewrite committed as a new snapshot carrying the
         compaction cut. At 10^10 rows this is what keeps an append-delta
-        read from unioning O(rounds) file sets (and the frontier
-        reconstruction join from deepening): reads after the cut touch one
-        path. ``df`` overrides the consolidated content (used by the
-        frontier MERGE, which folds updates INTO base instead of unioning
-        them). Resume metadata (round/seq_offset) is carried forward from
-        the latest manifest so a compaction never disturbs restart."""
+        read from unioning O(rounds) file sets: reads after the cut touch
+        one path. Resume metadata (round/seq_offset) is carried forward from
+        the latest manifest so a compaction never disturbs restart. (The
+        frontier's update log is folded into ``frontier_base`` instead, by
+        ``engine.compact_frontier``.)"""
         prev = self.latest()
         if prev is None:
             raise ValueError("compact() on an empty store")
-        cur = df if df is not None else self.read(spark, table)
         meta = {k: prev[k] for k in ("round", "seq_offset") if k in prev}
-        meta.update(extra_meta or {})
         meta["compacts"] = {table: prev["snapshot_id"]}
-        return self.commit({table: cur}, meta)
+        return self.commit({table: self.read(spark, table)}, meta)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Physically delete snapshots that no current read touches

@@ -5,6 +5,8 @@ web graph (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 
@@ -71,27 +73,6 @@ def test_document_spans_byte_exact(result, fixture_dir):
         assert got_spans == want, r.doc_id
 
 
-def test_bloom_prefilter_path_identical(spark, fixture_dir):
-    """With use_bloom=True the sharded-Bloom prefilter fronts the exact
-    anti-join; no false negatives -> identical crawl order and seen set."""
-    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
-    pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    installed = []
-    frontier = engine.install_seeds(seeds, 8, cached=installed)
-    res = engine.crawl_frontier(spark, frontier, pages, use_bloom=True)
-    golden = pq.read_table(f"{fixture_dir}/crawl_order_golden.parquet") \
-        .to_pylist()
-    got = [r.asDict() for r in res["crawl_order"]
-           .select("crawl_seq", "round", "host_key", "url", "depth",
-                   "attempts", "ok").orderBy("crawl_seq").collect()]
-    assert got == golden
-    g_seen = {r["url"] for r in
-              pq.read_table(f"{fixture_dir}/seen_golden.parquet").to_pylist()}
-    assert {r.url for r in res["seen"].collect()} == g_seen
-    for df in installed + res["_cached"]:
-        df.unpersist()
-
-
 def test_score_coverage(result):
     # fixture pages must exercise both zero and positive score branches
     scores = [r.validity_score for r in
@@ -143,6 +124,10 @@ def test_run_rounds_leaves_no_cached_data(spark, fixture_dir, tmp_path):
     numbering's intermediate and the frontier re-read after each round."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
+    # Spark caches by plan: the module's ``result`` fixture holds the same
+    # install intermediate as the non-bucketed crawl, which would share that
+    # entry, release it and end one below the start
+    spark.catalog.clearCache()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     for bucketed in (True, False):
@@ -173,7 +158,8 @@ class _RoundFailsStore(SnapshotStore):
 def test_run_rounds_restores_adaptive_setting(spark, fixture_dir, tmp_path):
     """The crawl runs without AQE, install included, and leaves the
     session's setting as it found it: on a normal return, after
-    ``stop_after_round``, when the crawl raises, and when it was off."""
+    ``stop_after_round``, when the crawl raises, and when it was off.
+    ``delta_state=False`` raises before anything is read or written."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet") \
         .orderBy("seed_id").limit(4)
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
@@ -185,6 +171,14 @@ def test_run_rounds_restores_adaptive_setting(spark, fixture_dir, tmp_path):
     engine.run_rounds(spark, seeds, pages, store, host_budget=2)
     assert spark.conf.get(AQE) == "true"
     assert [m["round"] for m in store.snapshots()] == [-1, 0, 1]
+
+    # the retired rewrite layout is refused before the store is touched
+    retired = SnapshotStore(str(tmp_path / "retired"))
+    with pytest.raises(ValueError, match="delta_state=False"):
+        engine.run_rounds(spark, seeds, pages, retired, host_budget=2,
+                          delta_state=False)
+    assert spark.conf.get(AQE) == "true"
+    assert os.listdir(retired.root) == []
 
     for before in ("true", "false"):
         spark.conf.set(AQE, before)

@@ -58,7 +58,7 @@ def test_t2_seen_and_frontier_exact(spark, t2_store):
     golden_f = {r["url"]: (r["state"], r["fail_count"]) for r in
                 pq.read_table(f"{fx}/frontier_golden.parquet").to_pylist()}
     got_f = {r.url: (r.state, r.fail_count) for r in
-             store.read(spark, "frontier").collect()}
+             engine.read_frontier_delta(spark, store).collect()}
     assert got_f == golden_f
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
 
-from plan_audit import unpartitioned_window_offenses  # noqa: E402
+from plan_audit import _reduced, unpartitioned_window_offenses  # noqa: E402
 
 from genesis_spark.operators.seq import with_global_running_sum  # noqa: E402
 
@@ -73,3 +73,39 @@ def test_join_with_one_raw_side_still_flags(spark):
     j = raw.join(F.broadcast(agg), "g")
     df = j.withColumn("rn", F.row_number().over(Window.orderBy("id")))
     assert unpartitioned_window_offenses(df)
+
+
+class _Seq:
+    """The two methods of a Scala ``Seq`` that the audit calls."""
+
+    def __init__(self, items):
+        self.items = items
+
+    def size(self):
+        return len(self.items)
+
+    def apply(self, i):
+        return self.items[i]
+
+
+class _Node:
+    """A logical plan node as the audit sees it through py4j."""
+
+    def __init__(self, name, *children):
+        self.name, self.kids = name, children
+
+    def nodeName(self):
+        return self.name
+
+    def children(self):
+        return _Seq(self.kids)
+
+
+def test_bare_local_limit_is_not_a_reducer():
+    # LocalLimit bounds rows per partition only: k x numPartitions rows of
+    # a table-scale scan still reach a window above it
+    scan = _Node("LogicalRelation")
+    assert not _reduced(_Node("LocalLimit", scan))
+    assert not _reduced(_Node("Project", _Node("LocalLimit", scan)))
+    assert _reduced(_Node("GlobalLimit", _Node("LocalLimit", scan)))
+    assert _reduced(_Node("LocalLimit", _Node("LocalRelation")))

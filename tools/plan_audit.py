@@ -94,9 +94,11 @@ WINDOW_SANCTIONED: dict[str, str] = {}
 # logical nodes that bound the row count flowing up to a window: anything
 # above an Aggregate is O(groups); WindowGroupLimit/Limit prune to top-k
 # per map partition before the final sort; Deduplicate is an Aggregate in
-# disguise.
+# disguise. A bare LocalLimit is not one: it bounds rows per partition, so
+# k x numPartitions rows still reach the window; the optimizer's top-k
+# shape is GlobalLimit(LocalLimit(...)), which GlobalLimit covers.
 _WINDOW_REDUCERS = ("Aggregate", "WindowGroupLimit", "GlobalLimit",
-                    "LocalLimit", "Limit", "Deduplicate")
+                    "Limit", "Deduplicate")
 # leaves whose cardinality is a literal in the plan, not a table
 _BOUNDED_LEAVES = ("LocalRelation", "OneRowRelation")
 
