@@ -39,21 +39,32 @@ def test_resume_crawl_order_equals_golden(spark, resumed_store):
 
 
 def test_resume_seen_and_frontier(spark, resumed_store):
-    """Seen set and final frontier states equal the goldens, and the store
-    holds the delta layout: the install snapshot commits frontier_base
-    once; every later snapshot carries only O(round) frontier_updates,
-    never a rewritten frontier."""
     store, fx = resumed_store
     golden_seen = {r["url"] for r in
                    pq.read_table(f"{fx}/seen_golden.parquet").to_pylist()}
     got_seen = {r.url for r in store.read(spark, "seen").collect()}
     assert got_seen == golden_seen
+    states = {r["url"]: r["state"] for r in
+              pq.read_table(f"{fx}/frontier_golden.parquet").to_pylist()}
+    got_states = {r.url: r.state for r in
+                  engine.read_frontier_delta(spark, store).collect()}
+    assert got_states == states
+
+
+def test_delta_state_resume_and_no_rewrite(spark, resumed_store):
+    """The 10^10-row frontier layout: install writes frontier_base once;
+    every round commits only O(round) state deltas. Resumed final states
+    must equal the goldens; no snapshot after install may contain a full
+    frontier table."""
+    store, fx = resumed_store
     golden = {r["url"]: (r["state"], r["fail_count"]) for r in
               pq.read_table(f"{fx}/frontier_golden.parquet").to_pylist()}
     got = {r.url: (r.state, r.fail_count) for r in
            engine.read_frontier_delta(spark, store).collect()}
     assert got == golden
 
+    # layout: exactly one frontier_base (the install snapshot); every later
+    # snapshot carries only delta updates, never a rewritten frontier
     snaps = store.snapshots()
     assert [m["tables"] for m in snaps[:1]] == [["frontier_base"]]
     for m in snaps[1:]:
