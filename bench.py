@@ -478,24 +478,29 @@ def run_scaling() -> dict:
 
 def run_crawl(fixture_dir: str, cores: int) -> dict:
     """End-to-end crawl (fetch-join + Arrow parse + BFS) on the synthetic
-    web graph — reported for transparency; too small to saturate 32 cores,
-    so the scaling claim rides on bench_frontier."""
+    web graph, every seed in one round of ``run_rounds`` committed to a
+    snapshot store in a temporary directory — reported for transparency;
+    too small to saturate 32 cores, so the scaling claim rides on
+    bench_frontier."""
+    import tempfile
+
     from genesis_spark.crawler import engine
     from genesis_spark.session import get_spark
+    from genesis_spark.sources.tables import SnapshotStore
 
     spark = get_spark(app_name=f"bench-crawl-{cores}", cores=cores,
                       shuffle_partitions=32)
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    warm = engine.run(spark, seeds.limit(2), pages, host_budget=1 << 30)
-    warm["crawl_order"].count()
-    for df in warm["_cached"]:
-        df.unpersist()
-    t0 = time.perf_counter()
-    res = engine.run(spark, seeds, pages, host_budget=1 << 30)
-    n_sched = res["crawl_order"].count()
-    n_seen = res["seen"].count()
-    dt = time.perf_counter() - t0
+    with tempfile.TemporaryDirectory() as tmp:
+        engine.run_rounds(spark, seeds.limit(2), pages,
+                          SnapshotStore(f"{tmp}/warm"), host_budget=1 << 30)
+        t0 = time.perf_counter()
+        store = SnapshotStore(f"{tmp}/crawl")
+        engine.run_rounds(spark, seeds, pages, store, host_budget=1 << 30)
+        n_sched = store.read(spark, "crawl_order").count()
+        n_seen = store.read(spark, "seen").count()
+        dt = time.perf_counter() - t0
     spark.stop()
     return {"cores": cores, "wall_s": round(dt, 2),
             "urls_scheduled": n_sched, "urls_deduped": n_seen,

@@ -79,4 +79,3 @@ CUCKOO_BUCKETS_PER_SHARD = 1 << 14   # x4 slots x2 bytes = 128 KiB/shard
 CUCKOO_SLOTS = 4                # fingerprints per bucket (Fan et al. 2014)
 CUCKOO_MAX_KICKS = 500          # eviction chain bound before the stash
 CUCKOO_STASH = 16               # per-shard overflow stash entries
-CUCKOO_BROADCAST_MAX_BYTES = 1 << 26  # same cap/fallback contract as Bloom

@@ -17,7 +17,9 @@ Every stage is DataFrame-native: fetch = equi-join against ``web_pages``
 window functions + the scalable global-sequence operator. The only Python is
 the Arrow-batched parse kernel.
 
-State lives in a snapshot store in one layout: the install writes
+``run_rounds`` is the one entry point: it installs the seeds, crawls one
+round per ``crawl_frontier`` call and commits each round to a snapshot
+store. State lives there in one layout: the install writes
 ``frontier_base`` once, each round appends the state changes of the seeds
 it dispatched as ``frontier_updates``, and ``read_frontier_delta`` joins
 the two back into the current frontier.
@@ -112,14 +114,14 @@ def install_seeds_bucketed(seeds: DataFrame,
     JVM-only) to an md5-based one a DuckDB oracle can replay bit-for-bit —
     the driver CORRECTNESS row runs this variant; everything downstream of
     the bucket assignment (window rank, round) is identical, and
-    tests/test_crawl_engine.py asserts both variants agree on the per-host
+    tests/test_operators.py asserts both variants agree on the per-host
     FIFO structure."""
     host_key = U.host_name_expr(F.col("url"))
     if portable_bucket:
         bucket = (F.conv(F.substring(F.md5(host_key), 25, 8), 16, 10)
                   .cast("long") % buckets)
     else:
-        bucket = F.pmod(F.xxhash64(host_key), F.lit(buckets))
+        bucket = U.politeness_bucket_expr(host_key, buckets)
     w = Window.partitionBy("bucket").orderBy("installed_at", "seq")
     ranked = (_dedup(seeds)
               .withColumn("bucket", bucket)
@@ -134,16 +136,19 @@ _PASSTHROUGH = ["task_id", "host_rank", "round", "host_key", "depth", "pos"]
 
 
 def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
-                   max_depth: int = conf.MAX_ALLOWED_DEPTH,
+                   cached: list[DataFrame],
                    seq_offset: int = 0) -> dict[str, DataFrame]:
-    """Crawl every frontier host to completion; returns crawl_order / seen /
-    documents / frontier_done DataFrames matching the oracle goldens.
+    """Crawl every frontier host to completion; returns the round's
+    ``crawl_order`` / ``seen`` / ``documents`` / ``frontier_updates`` in
+    their committed column sets, matching the oracle goldens.
 
-    ``seq_offset`` shifts crawl_seq for multi-round incremental runs.
-    Link admission is the exact per-task anti-join against ``seen``, which
-    starts empty here and holds only this call's admissions: it is bounded
-    by one round's links, never by the frontier, so no prefilter in front
-    of the join would save it work.
+    ``cached`` receives every frame the crawl persisted, for the caller to
+    ``.unpersist()`` once the tables are written. ``seq_offset`` shifts
+    crawl_seq for multi-round incremental runs. Link admission is the exact
+    per-task anti-join against ``seen``, which starts empty here and holds
+    only this call's admissions: it is bounded by one round's links, never
+    by the frontier, so no prefilter in front of the join would save it
+    work.
     """
     pages_j = pages.select(
         F.col("url_hash").alias("p_hash"), F.col("url").alias("p_url"),
@@ -155,9 +160,8 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
     seen = spark.createDataFrame([], "task_id long, url string, host_key string")
     order_waves: list[DataFrame] = []
     doc_waves: list[DataFrame] = []
-    cached: list[DataFrame] = []
 
-    for d in range(max_depth + 1):
+    for d in range(conf.MAX_ALLOWED_DEPTH + 1):
         fetched = wave.join(
             pages_j,
             (F.xxhash64(wave.url) == pages_j.p_hash) & (wave.url == pages_j.p_url),
@@ -181,7 +185,7 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
         cached.append(parsed)
         doc_waves.append(parsed)
 
-        if d >= max_depth:
+        if d >= conf.MAX_ALLOWED_DEPTH:
             break
         kids = parsed.select(
             "task_id", "host_rank", "round", "host_key",
@@ -209,54 +213,33 @@ def crawl_frontier(spark: SparkSession, frontier: DataFrame, pages: DataFrame,
         all_rows = all_rows.unionByName(w)
     ordered = with_global_seq(all_rows, ["host_rank", "depth", "pos"],
                               "crawl_seq", start=seq_offset, cached=cached)
-    crawl_order_full = ordered.withColumn(
+    crawl_order = ordered.withColumn(
         "attempts", F.when((F.col("depth") == 0) & ~F.col("ok"),
-                           conf.MAX_SEED_ATTEMPTS).otherwise(1))
-    crawl_order_full = crawl_order_full.persist()
-    cached.append(crawl_order_full)
+                           conf.MAX_SEED_ATTEMPTS).otherwise(1)).persist()
+    cached.append(crawl_order)
 
     docs = doc_waves[0]
     for w in doc_waves[1:]:
         docs = docs.unionByName(w)
     documents = docs.join(
-        crawl_order_full.select("task_id", "depth", "pos", "crawl_seq"),
+        crawl_order.select("task_id", "depth", "pos", "crawl_seq"),
         ["task_id", "depth", "pos"])
 
-    # seed outcome -> frontier end state (3-strikes abandon, O8)
-    seed_ok = crawl_order_full.filter("depth = 0").select(
-        F.col("task_id").alias("url_hash"), F.col("ok").alias("_seed_ok"))
-    frontier_done = (frontier.join(seed_ok, "url_hash", "left")
-                     .withColumn("state", F.when(F.col("_seed_ok"), "done")
-                                 .otherwise("failed"))
-                     .withColumn("fail_count",
-                                 F.when(F.col("_seed_ok"), 0).otherwise(3))
-                     .drop("_seed_ok"))
+    # seed outcome -> frontier end state (3-strikes abandon, O8): each
+    # dispatched seed is its task's one depth-0 row, so the state changes
+    # are O(round), never a pass over the frontier
+    frontier_updates = crawl_order.filter("depth = 0").select(
+        F.col("task_id").alias("url_hash"),
+        F.when(F.col("ok"), "done").otherwise("failed").alias("state"),
+        F.when(F.col("ok"), 0).otherwise(3).alias("fail_count"))
 
-    crawl_order = crawl_order_full.select(
-        "crawl_seq", "round", "host_key", "url", "depth", "attempts", "ok",
-        "task_id", "host_rank", "pos")
-    return {"crawl_order": crawl_order, "seen": seen,
-            "documents": documents, "frontier_done": frontier_done,
-            "_cached": cached}
-
-
-def run(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
-        host_budget: int = conf.WAVE_HOST_BUDGET,
-        bucketed: bool = False) -> dict[str, DataFrame]:
-    """Install + crawl the whole frontier in one multi-wave job.
-
-    ``bucketed=True`` uses the production-scale install (no global-rank
-    barrier; see install_seeds_bucketed) — same seen set, documents, and
-    per-host order; cross-host crawl_seq interleaving differs from the
-    golden global order. The returned ``_cached`` list holds every frame
-    the install and the crawl persisted, for the caller to ``.unpersist()``
-    once it has read the results."""
-    cached: list[DataFrame] = []
-    frontier = (install_seeds_bucketed(seeds, host_budget) if bucketed
-                else install_seeds(seeds, host_budget, cached=cached))
-    res = crawl_frontier(spark, frontier, pages)
-    res["_cached"] = cached + res["_cached"]
-    return res
+    return {"crawl_order": crawl_order.select(
+                "crawl_seq", "round", "host_key", "url", "depth", "attempts",
+                "ok"),
+            "seen": seen,
+            "documents": documents.drop("task_id", "host_rank", "pos",
+                                        "round"),
+            "frontier_updates": frontier_updates}
 
 
 def read_frontier_delta(spark: SparkSession, store) -> DataFrame:
@@ -331,8 +314,10 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     Reads reconstruct it via ``read_frontier_delta``. ``compact_every=n``
     folds the update log into a fresh ``frontier_base`` after every n-th
     round (``compact_frontier``), so the reconstruction stays one join
-    deep. ``bucketed`` selects the production-scale install (no
-    global-rank barrier), as in ``run``.
+    deep. ``bucketed`` selects the production-scale install
+    (``install_seeds_bucketed``: no global-rank barrier; the same seen set,
+    documents and per-host order, but crawl_seq interleaves hosts by
+    bucket rather than in the golden global order).
 
     ``delta_state`` and ``use_bloom`` are retired and select nothing; they
     stay only because the crawl benchmark passes them, and go with its next
@@ -353,9 +338,8 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     and skewed joins are not split. Small per-wave shuffles are no longer
     coalesced, so each runs ``spark.sql.shuffle.partitions`` tasks: with 8
     partitions and many waves (tests/test_crawl_t3.py) the crawl costs
-    about a third more CPU than with AQE. ``install_seeds*`` and
-    ``crawl_frontier`` called directly, and the query registry, keep the
-    session's AQE."""
+    about a third more CPU than with AQE. ``install_seeds*`` called
+    directly, and the query registry, keep the session's AQE."""
     if not delta_state:
         raise ValueError("delta_state=False is retired: the frontier is "
                          "kept only as frontier_base + frontier_updates")
@@ -382,34 +366,26 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     for r in range(next_round, max_round + 1):
         todo = frontier.filter((F.col("round") == r) &
                                (F.col("state") == "pending"))
-        res = crawl_frontier(spark, todo, pages, seq_offset=seq_offset)
-        seq_offset += res["crawl_order"].count()
+        cached: list[DataFrame] = []
+        tables = crawl_frontier(spark, todo, pages, cached,
+                                seq_offset=seq_offset)
+        seq_offset += tables["crawl_order"].count()
         # per-partition fetch/parse metrics (S12/ST4): politeness bucket ==
         # fetch partition, so (round, depth, bucket) rows are partition-level
         # lineage for this snapshot
-        metrics = (res["crawl_order"]
-                   .groupBy("round", "depth",
-                            F.pmod(F.xxhash64("host_key"),
-                                   F.lit(conf.POLITENESS_BUCKETS))
-                            .alias("bucket"))
-                   .agg(F.count("*").alias("n_fetched"),
-                        F.sum(F.col("ok").cast("int")).alias("n_ok"),
-                        F.sum((~F.col("ok")).cast("int")).alias("n_failed"),
-                        F.sum(F.col("attempts")).alias("n_attempts")))
-        tables = {
-            "crawl_order": res["crawl_order"].drop("task_id", "host_rank", "pos"),
-            "seen": res["seen"],
-            "documents": res["documents"].drop("task_id", "host_rank", "pos",
-                                               "round"),
-            "metrics": metrics,
-            # O(round), not O(frontier)
-            "frontier_updates": res["frontier_done"].select(
-                "url_hash", "state", "fail_count"),
-        }
+        tables["metrics"] = (
+            tables["crawl_order"]
+            .groupBy("round", "depth",
+                     U.politeness_bucket_expr(F.col("host_key"))
+                     .alias("bucket"))
+            .agg(F.count("*").alias("n_fetched"),
+                 F.sum(F.col("ok").cast("int")).alias("n_ok"),
+                 F.sum((~F.col("ok")).cast("int")).alias("n_failed"),
+                 F.sum(F.col("attempts")).alias("n_attempts")))
         store.commit(tables, {"round": r, "seq_offset": seq_offset})
         if compact_every and (r + 1) % compact_every == 0:
             compact_frontier(spark, store)          # bounded update-log depth
-        for df in res["_cached"]:
+        for df in cached:
             df.unpersist()
         frontier.unpersist()
         if r == max_round or (stop_after_round is not None

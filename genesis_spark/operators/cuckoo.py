@@ -217,103 +217,6 @@ _SHARD_SCHEMA = ("shard int, table binary, stash_b binary, "
                  "stash_fp binary, saturated boolean")
 
 
-class ShardedCuckoo:
-    """Driver-held filter for the broadcast probe path (size-capped); the
-    routed path keeps shards as a DataFrame and never materializes this."""
-
-    def __init__(self, shards: dict[int, CuckooShard], n_shards: int,
-                 n_buckets: int, slots: int):
-        self.shards = shards
-        self.n_shards = n_shards
-        self.n_buckets = n_buckets
-        self.slots = slots
-
-    @classmethod
-    def empty(cls, n_shards: int = conf.CUCKOO_SHARDS,
-              n_buckets: int = conf.CUCKOO_BUCKETS_PER_SHARD,
-              slots: int = conf.CUCKOO_SLOTS) -> "ShardedCuckoo":
-        return cls({}, n_shards, n_buckets, slots)
-
-    def _shard_ids(self, h1: np.ndarray) -> np.ndarray:
-        return (h1 % np.uint64(self.n_shards)).astype(np.int64)
-
-    def might_contain_hashes(self, h1: np.ndarray,
-                             h2: np.ndarray) -> np.ndarray:
-        if len(h1) == 0:
-            return np.zeros(0, dtype=bool)
-        fp, i1 = _fp_i1(h1, h2, self.n_shards, self.n_buckets)
-        sid = self._shard_ids(h1)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sid):
-            shard = self.shards.get(int(s))
-            if shard is None:
-                continue
-            mask = sid == s
-            out[mask] = shard.might_contain(i1[mask], fp[mask])
-        return out
-
-    def insert_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
-        fp, i1 = _fp_i1(h1, h2, self.n_shards, self.n_buckets)
-        sid = self._shard_ids(h1)
-        for s in np.unique(sid):
-            shard = self.shards.setdefault(
-                int(s), CuckooShard(self.n_buckets, self.slots))
-            mask = sid == s
-            shard.insert_many(i1[mask], fp[mask])
-
-    def delete_hashes(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        fp, i1 = _fp_i1(h1, h2, self.n_shards, self.n_buckets)
-        sid = self._shard_ids(h1)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sid):
-            shard = self.shards.get(int(s))
-            if shard is None:
-                continue
-            mask = sid == s
-            out[mask] = shard.delete_many(i1[mask], fp[mask])
-        return out
-
-    def total_bytes(self) -> int:
-        return sum(s.table.nbytes + 10 * len(s.stash_b)
-                   for s in self.shards.values())
-
-    def union(self, other: "ShardedCuckoo") -> "ShardedCuckoo":
-        """Merge by re-inserting the other filter's stored fingerprints.
-        A stored entry at bucket ``b`` is valid at ``b`` or ``b ^ mix(fp)``
-        regardless of which was its original home (the mix is self-inverse),
-        so re-insertion preserves the no-false-negative contract. Unlike a
-        Bloom OR this can saturate a shard under pressure — which degrades
-        to maybe, never to a miss."""
-        assert (self.n_shards, self.n_buckets, self.slots) == \
-            (other.n_shards, other.n_buckets, other.slots), \
-            "cuckoo params differ"
-        merged = {sid: CuckooShard(self.n_buckets, self.slots,
-                                   table=s.table.copy(),
-                                   stash_b=s.stash_b, stash_fp=s.stash_fp,
-                                   saturated=s.saturated)
-                  for sid, s in self.shards.items()}
-        for sid, s in other.shards.items():
-            if sid not in merged:
-                merged[sid] = CuckooShard(self.n_buckets, self.slots,
-                                          table=s.table.copy(),
-                                          stash_b=s.stash_b,
-                                          stash_fp=s.stash_fp,
-                                          saturated=s.saturated)
-                continue
-            dst = merged[sid]
-            if s.saturated:
-                dst.saturated = True
-                continue
-            b_idx, s_idx = np.nonzero(s.table)
-            fps = s.table[b_idx, s_idx]
-            dst.insert_many(b_idx.astype(np.int64), fps)
-            for sb, sf in zip(s.stash_b, s.stash_fp):
-                dst._insert_one(int(sb), int(sf), conf.CUCKOO_MAX_KICKS,
-                                conf.CUCKOO_STASH)
-        return ShardedCuckoo(merged, self.n_shards, self.n_buckets,
-                             self.slots)
-
-
 # ---------------------------------------------------------------------------
 # distributed build / probe / delete
 # ---------------------------------------------------------------------------
@@ -344,53 +247,6 @@ def build_cuckoo_shards(df: DataFrame, key_col: str,
         return pd.DataFrame([shard.to_row(int(pdf["_cshard"].iloc[0]))])
 
     return hashed.groupBy("_cshard").applyInPandas(build_one, _SHARD_SCHEMA)
-
-
-def build_cuckoo(df: DataFrame, key_col: str,
-                 n_shards: int = conf.CUCKOO_SHARDS,
-                 n_buckets: int = conf.CUCKOO_BUCKETS_PER_SHARD,
-                 slots: int = conf.CUCKOO_SLOTS) -> ShardedCuckoo:
-    """Driver-held build for the broadcast probe path: the routed build's
-    shard rows collected into a ShardedCuckoo (each shard row is small —
-    n_buckets*slots*2 bytes)."""
-    rows = build_cuckoo_shards(df, key_col, n_shards, n_buckets,
-                               slots).collect()
-    shards = {r.shard: CuckooShard.from_row(r.table, r.stash_b, r.stash_fp,
-                                            r.saturated, n_buckets, slots)
-              for r in rows}
-    return ShardedCuckoo(shards, n_shards, n_buckets, slots)
-
-
-def filter_not_seen_cuckoo(df: DataFrame, key_col: str, ck: ShardedCuckoo,
-                           flag_col: str = "_maybe_seen",
-                           max_broadcast_bytes: int | None = None
-                           ) -> DataFrame:
-    """Broadcast probe: append a boolean maybe-seen column; ``False`` rows
-    are definitely new. Size-capped like the Bloom path — an over-cap
-    filter is not broadcast and every row degrades to maybe (the exact
-    anti-join downstream stays the truth)."""
-    if max_broadcast_bytes is None:
-        max_broadcast_bytes = conf.CUCKOO_BROADCAST_MAX_BYTES
-    if ck.total_bytes() > max_broadcast_bytes:
-        return df.withColumn(flag_col, F.lit(True))
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(ck)
-
-    from pyspark.sql import types as T
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(flag_col, T.BooleanType(),
-                                                False)])
-
-    def apply(batches):
-        filt = bc.value
-        for pdf in batches:
-            h1 = pdf[_H1_COL].to_numpy(dtype=np.int64).astype(np.uint64)
-            h2 = pdf[_H2_COL].to_numpy(dtype=np.int64).astype(np.uint64)
-            pdf = pdf.drop(columns=[_H1_COL, _H2_COL])
-            pdf[flag_col] = filt.might_contain_hashes(h1, h2)
-            yield pdf
-
-    return _hash_cols(df, key_col).mapInPandas(apply, schema)
 
 
 def filter_not_seen_cuckoo_routed(df: DataFrame, key_col: str,

@@ -26,6 +26,7 @@ tests/test_global_scan.py).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,12 +42,17 @@ def _ordered_pid(df: DataFrame, order_cols,
     offset pass and the finishing pass see the identical partitioning; the
     persisted frame is appended to ``cached`` when given, for the caller to
     ``.unpersist()`` once the result is materialized, and otherwise stays
-    cached, and its plan with it, for the life of the session."""
+    cached, and its plan with it, for the life of the session.
+
+    Spark caches by plan: when the same plan is already cached, ``persist``
+    reuses that entry, which belongs to whoever made it, so it is not
+    appended to ``cached`` and the caller's release leaves it in place."""
     d = (df.repartitionByRange(*order_cols)
            .sortWithinPartitions(*order_cols)
-           .withColumn("_pid", F.spark_partition_id())
-           .persist())
-    if cached is not None:
+           .withColumn("_pid", F.spark_partition_id()))
+    new_entry = d.storageLevel == StorageLevel.NONE
+    d = d.persist()
+    if cached is not None and new_entry:
         cached.append(d)
     return d
 

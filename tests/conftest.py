@@ -1,7 +1,8 @@
 """Shared Spark fixture: one local session for the whole test run.
 
-local[32]-style config per the sandbox; shuffle partitions kept small so the
-tiny fixture tables don't drown in empty tasks (AQE coalesces anyway).
+``local[8]`` with 8 shuffle partitions, so the tiny fixture tables don't
+drown in empty tasks. AQE stays on for the session; ``run_rounds`` turns it
+off for the crawl, so the crawl's per-wave shuffles run all 8 partitions.
 """
 
 from __future__ import annotations

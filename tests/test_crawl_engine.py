@@ -1,7 +1,7 @@
 """Crawl-engine vs oracle golden equality (the north-rule contract):
 crawl order, URL-seen set, frontier end-state, and per-document span
-sequences must match the pure-Python oracle exactly on the t1 fixture
-web graph (SURVEY.md §5.2)."""
+sequences committed by ``run_rounds`` must match the pure-Python oracle
+exactly on the t1 fixture web graph (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
@@ -21,19 +21,18 @@ def fixture_dir():
 
 
 @pytest.fixture(scope="module")
-def result(spark, fixture_dir):
+def store(spark, fixture_dir, tmp_path_factory):
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    res = engine.run(spark, seeds, pages)
-    yield res
-    for df in res["_cached"]:
-        df.unpersist()
+    store = SnapshotStore(str(tmp_path_factory.mktemp("t1") / "crawl"))
+    engine.run_rounds(spark, seeds, pages, store)
+    return store
 
 
-def test_crawl_order_exact(result, fixture_dir):
+def test_crawl_order_exact(spark, store, fixture_dir):
     golden = pq.read_table(f"{fixture_dir}/crawl_order_golden.parquet") \
         .to_pylist()
-    got = [r.asDict() for r in result["crawl_order"]
+    got = [r.asDict() for r in store.read(spark, "crawl_order")
            .select("crawl_seq", "round", "host_key", "url", "depth",
                    "attempts", "ok")
            .orderBy("crawl_seq").collect()]
@@ -42,25 +41,25 @@ def test_crawl_order_exact(result, fixture_dir):
         assert g == o, f"crawl_seq {o['crawl_seq']}: {g} != {o}"
 
 
-def test_seen_set_exact(result, fixture_dir):
+def test_seen_set_exact(spark, store, fixture_dir):
     golden = {(r["url"], r["host_key"])
               for r in pq.read_table(f"{fixture_dir}/seen_golden.parquet").to_pylist()}
-    got = {(r.url, r.host_key) for r in result["seen"].collect()}
+    got = {(r.url, r.host_key) for r in store.read(spark, "seen").collect()}
     assert got == golden
 
 
-def test_frontier_end_state(result, fixture_dir):
+def test_frontier_end_state(spark, store, fixture_dir):
     golden = {r["url"]: (r["state"], r["fail_count"], r["seq"])
               for r in pq.read_table(f"{fixture_dir}/frontier_golden.parquet").to_pylist()}
     got = {r.url: (r.state, r.fail_count, r.seq)
-           for r in result["frontier_done"].collect()}
+           for r in engine.read_frontier_delta(spark, store).collect()}
     assert got == golden
 
 
-def test_document_spans_byte_exact(result, fixture_dir):
+def test_document_spans_byte_exact(spark, store, fixture_dir):
     golden = pq.read_table(f"{fixture_dir}/documents_golden.parquet").to_pylist()
     by_seq = {g["crawl_seq"]: g for g in golden}
-    got = result["documents"].select(
+    got = store.read(spark, "documents").select(
         "crawl_seq", "doc_id", "validity_score", "spans").collect()
     assert len(got) == len(golden)
     for r in got:
@@ -73,28 +72,71 @@ def test_document_spans_byte_exact(result, fixture_dir):
         assert got_spans == want, r.doc_id
 
 
-def test_score_coverage(result):
+def test_score_coverage(spark, store):
     # fixture pages must exercise both zero and positive score branches
     scores = [r.validity_score for r in
-              result["documents"].select("validity_score").collect()]
+              store.read(spark, "documents").select("validity_score")
+              .collect()]
     assert any(s > 0 for s in scores) and any(s == 0 for s in scores)
 
 
-def test_scaled_install_crawl_invariants(spark, fixture_dir):
+_ARRAY = "array<string>"
+# (name, type) of each round table as the store commits it; resume and the
+# crawl benchmark's read-back depend on these
+COMMITTED = {
+    "crawl_order": [("crawl_seq", "bigint"), ("round", "int"),
+                    ("host_key", "string"), ("url", "string"),
+                    ("depth", "int"), ("attempts", "int"),
+                    ("ok", "boolean")],
+    "seen": [("task_id", "bigint"), ("url", "string"),
+             ("host_key", "string")],
+    "documents": [("depth", "int"), ("host_key", "string"),
+                  ("doc_id", "string"), ("url", "string"),
+                  ("base_url", "string"), ("network", "string"),
+                  ("title", "string"), ("meta_description", "string"),
+                  ("content", "string"), ("important_content", "string"),
+                  ("meta_keywords", "string"), ("content_type", _ARRAY),
+                  ("sub_url", _ARRAY), ("images", _ARRAY),
+                  ("videos", _ARRAY), ("documents", _ARRAY),
+                  ("archives", _ARRAY), ("clearnet_links", _ARRAY),
+                  ("sections", _ARRAY), ("names", _ARRAY),
+                  ("emails", _ARRAY), ("phone_numbers", _ARRAY),
+                  ("validity_score", "int"),
+                  ("spans", "array<struct<kind:string,text:string,"
+                            "media_ref:string,offset:int>>"),
+                  ("crawl_seq", "bigint")],
+    "metrics": [("round", "int"), ("depth", "int"), ("bucket", "bigint"),
+                ("n_fetched", "bigint"), ("n_ok", "bigint"),
+                ("n_failed", "bigint"), ("n_attempts", "bigint")],
+    "frontier_updates": [("url_hash", "bigint"), ("state", "string"),
+                         ("fail_count", "int")],
+}
+
+
+def test_committed_round_schemas(spark, store):
+    for table, want in COMMITTED.items():
+        got = [(f.name, f.dataType.simpleString())
+               for f in store.read(spark, table).schema.fields]
+        assert got == want, table
+
+
+def test_scaled_install_crawl_invariants(spark, fixture_dir, tmp_path):
     """The bucketed production install (no global-rank barrier) must crawl
     the SAME pages in the SAME per-host order as the golden global path —
     only the cross-host interleaving of crawl_seq may differ."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    res = engine.run(spark, seeds, pages, bucketed=True)
+    store = SnapshotStore(str(tmp_path / "bucketed"))
+    engine.run_rounds(spark, seeds, pages, store, bucketed=True)
 
     g_seen = {(r["url"], r["host_key"]) for r in
               pq.read_table(f"{fixture_dir}/seen_golden.parquet").to_pylist()}
-    assert {(r.url, r.host_key) for r in res["seen"].collect()} == g_seen
+    assert {(r.url, r.host_key)
+            for r in store.read(spark, "seen").collect()} == g_seen
 
     golden = pq.read_table(f"{fixture_dir}/crawl_order_golden.parquet") \
         .to_pylist()
-    got = [r.asDict() for r in res["crawl_order"]
+    got = [r.asDict() for r in store.read(spark, "crawl_order")
            .select("crawl_seq", "host_key", "url", "depth", "attempts", "ok")
            .collect()]
     assert len(got) == len(golden)
@@ -112,11 +154,10 @@ def test_scaled_install_crawl_invariants(spark, fixture_dir):
               pq.read_table(f"{fixture_dir}/documents_golden.parquet")
               .to_pylist()}
     got_docs = {(r.doc_id, r.validity_score) for r in
-                res["documents"].select("doc_id", "validity_score")
+                store.read(spark, "documents").select("doc_id",
+                                                      "validity_score")
                 .collect()}
     assert got_docs == g_docs
-    for df in res["_cached"]:
-        df.unpersist()
 
 
 def test_run_rounds_leaves_no_cached_data(spark, fixture_dir, tmp_path):
@@ -124,10 +165,6 @@ def test_run_rounds_leaves_no_cached_data(spark, fixture_dir, tmp_path):
     numbering's intermediate and the frontier re-read after each round."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
     pages = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
-    # Spark caches by plan: the module's ``result`` fixture holds the same
-    # install intermediate as the non-bucketed crawl, which would share that
-    # entry, release it and end one below the start
-    spark.catalog.clearCache()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     for bucketed in (True, False):

@@ -104,6 +104,24 @@ def test_global_seq_releases_cached(spark):
     assert persistent().size() == before
 
 
+def test_global_seq_keeps_a_shared_cache_entry(spark):
+    """Spark caches by plan, so numbering one frame twice shares one cache
+    entry. The second caller did not make it, so releasing the second
+    caller's list leaves the first caller's frame cached."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    df = _frame(spark, 300)
+    first, second = [], []
+    assert with_global_seq(df, ["k"], "rn", cached=first).count() == 300
+    assert with_global_seq(df, ["k"], "rn", cached=second).count() == 300
+    for d in second:
+        d.unpersist()
+    assert first[0].storageLevel.useMemory
+    for d in first:
+        d.unpersist()
+    assert persistent().size() == before
+
+
 def test_lead_matches_flat_lead(spark):
     df = _frame(spark)
     w = Window.orderBy("k")
