@@ -327,19 +327,20 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
     anti-join (``crawl_frontier``), which the Bloom prefilter never changed.
 
     The whole call, install and resume read included, runs with
-    ``spark.sql.adaptive.enabled=false``; the session's value is restored
-    on return or raise. A round is a few dozen small queries over deep
-    union/persist plans, and with AQE each stage boundary re-plans the
-    query and posts its full plan string: that planning, not the pages,
-    was most of a round's CPU (54 jobs a round with AQE, 23 without, on
-    the crawl benchmark). The cost at scale: the fetch-join strategy and
-    the shuffle partition counts are fixed when the round is planned, from
-    the statistics of the cached wave frames, not re-chosen at run time,
-    and skewed joins are not split. Small per-wave shuffles are no longer
+    ``spark.sql.adaptive.enabled=false``; the session's value is restored on
+    return or raise, and a round that raises first releases the frames it
+    persisted, the frontier's included. A round is a few dozen small queries
+    over deep union/persist plans, and with AQE each stage boundary re-plans
+    the query and posts its full plan string: that planning, not the pages,
+    was most of a round's CPU (54 jobs a round with AQE, 23 without, on the
+    crawl benchmark). The cost at scale: the fetch-join strategy and the
+    shuffle partition counts are fixed when the round is planned, from the
+    statistics of the cached wave frames, not re-chosen at run time, and
+    skewed joins are not split. Small per-wave shuffles are no longer
     coalesced, so each runs ``spark.sql.shuffle.partitions`` tasks: with 8
-    partitions and many waves (tests/test_crawl_t3.py) the crawl costs
-    about a third more CPU than with AQE. ``install_seeds*`` called
-    directly, and the query registry, keep the session's AQE."""
+    partitions and many waves (tests/test_crawl_t3.py) the crawl costs about
+    a third more CPU than with AQE. ``install_seeds*`` called directly, and
+    the query registry, keep the session's AQE."""
     if not delta_state:
         raise ValueError("delta_state=False is retired: the frontier is "
                          "kept only as frontier_base + frontier_updates")
@@ -364,30 +365,32 @@ def run_rounds(spark: SparkSession, seeds: DataFrame, pages: DataFrame,
         frontier.unpersist()
         return
     for r in range(next_round, max_round + 1):
-        todo = frontier.filter((F.col("round") == r) &
-                               (F.col("state") == "pending"))
         cached: list[DataFrame] = []
-        tables = crawl_frontier(spark, todo, pages, cached,
-                                seq_offset=seq_offset)
-        seq_offset += tables["crawl_order"].count()
-        # per-partition fetch/parse metrics (S12/ST4): politeness bucket ==
-        # fetch partition, so (round, depth, bucket) rows are partition-level
-        # lineage for this snapshot
-        tables["metrics"] = (
-            tables["crawl_order"]
-            .groupBy("round", "depth",
-                     U.politeness_bucket_expr(F.col("host_key"))
-                     .alias("bucket"))
-            .agg(F.count("*").alias("n_fetched"),
-                 F.sum(F.col("ok").cast("int")).alias("n_ok"),
-                 F.sum((~F.col("ok")).cast("int")).alias("n_failed"),
-                 F.sum(F.col("attempts")).alias("n_attempts")))
-        store.commit(tables, {"round": r, "seq_offset": seq_offset})
-        if compact_every and (r + 1) % compact_every == 0:
-            compact_frontier(spark, store)          # bounded update-log depth
-        for df in cached:
-            df.unpersist()
-        frontier.unpersist()
+        try:    # a round that raises still releases its caches
+            todo = frontier.filter((F.col("round") == r) &
+                                   (F.col("state") == "pending"))
+            tables = crawl_frontier(spark, todo, pages, cached,
+                                    seq_offset=seq_offset)
+            seq_offset += tables["crawl_order"].count()
+            # per-partition fetch/parse metrics (S12/ST4): politeness bucket
+            # == fetch partition, so (round, depth, bucket) rows are
+            # partition-level lineage for this snapshot
+            tables["metrics"] = (
+                tables["crawl_order"]
+                .groupBy("round", "depth",
+                         U.politeness_bucket_expr(F.col("host_key"))
+                         .alias("bucket"))
+                .agg(F.count("*").alias("n_fetched"),
+                     F.sum(F.col("ok").cast("int")).alias("n_ok"),
+                     F.sum((~F.col("ok")).cast("int")).alias("n_failed"),
+                     F.sum(F.col("attempts")).alias("n_attempts")))
+            store.commit(tables, {"round": r, "seq_offset": seq_offset})
+            if compact_every and (r + 1) % compact_every == 0:
+                compact_frontier(spark, store)      # bounded update-log depth
+        finally:
+            for df in cached:
+                df.unpersist()
+            frontier.unpersist()
         if r == max_round or (stop_after_round is not None
                               and r >= stop_after_round):
             return

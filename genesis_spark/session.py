@@ -11,6 +11,25 @@ mirrored here by maxRecordsPerBatch).
 restores it after: a round is a few dozen small queries over deep
 union/persist plans, and AQE's per-stage re-planning of those plans cost
 more CPU than the round's pages. Everything else keeps AQE on.
+
+Compile policy (``C2_HOT_ONLY``): the driver JVM starts with HotSpot's four
+tier-4 thresholds raised tenfold, so only methods that prove hot reach the
+C2 compiler and lukewarm analyzer and planner code stays at C1. A cold crawl
+is the short-query case of *Adaptive Execution of Compiled Queries* (ICDE
+2018): compile time outweighs run time. Split by JVM thread
+(``tools/cpu_split.py``, one crawl_rounds operation, seed 1, 4-vCPU host),
+the JDK defaults spent 16 of the operation's 56 CPU s in C2 compiler
+threads, 4 s in C1 ones and 8 s in JVM threads that exited during it
+(compiler threads start and stop on demand), against 5 s in executor task
+threads. With this policy the same groups took 6, 4 and 4 of 42 CPU s. The
+trade-off: hot code (the install's generated code, a long crawl's inner
+loops) still reaches C2, after ten times as many calls and loop iterations,
+and runs at C1 speed until then. Plans and results do not change. The flags
+go through ``spark.driver.defaultJavaOptions``, so a caller's
+``spark.driver.extraJavaOptions`` adds to them rather than replacing them.
+They apply to the driver JVM only, which in local mode runs the executors
+too; executor JVMs of a cluster keep the JDK defaults, because that case was
+not measured.
 """
 
 from __future__ import annotations
@@ -20,6 +39,17 @@ import os
 from pyspark.sql import SparkSession
 
 MAX_DRIVER_MEM_GB = 48
+
+# HotSpot's tier-4 (C2) thresholds, ten times the JDK 17 defaults
+# (5000/600/15000/40000); see the module docstring
+C2_HOT_ONLY = ("-XX:Tier4InvocationThreshold=50000 "
+               "-XX:Tier4MinInvocationThreshold=6000 "
+               "-XX:Tier4CompileThreshold=150000 "
+               "-XX:Tier4BackEdgeThreshold=400000")
+
+# SQL executions kept in the status store; each holds its plan string,
+# 2-5 MB for a crawl round
+RETAINED_SQL_EXECUTIONS = 10
 
 
 def default_driver_memory() -> str:
@@ -70,6 +100,9 @@ def get_spark(app_name: str = "genesis-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
                 or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.ui.retainedExecutions",
+                str(RETAINED_SQL_EXECUTIONS))
+        .config("spark.driver.defaultJavaOptions", C2_HOT_ONLY)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     # RAM-backed scratch for shuffle/spill files when available — the

@@ -195,7 +195,8 @@ class _RoundFailsStore(SnapshotStore):
 def test_run_rounds_restores_adaptive_setting(spark, fixture_dir, tmp_path):
     """The crawl runs without AQE, install included, and leaves the
     session's setting as it found it: on a normal return, after
-    ``stop_after_round``, when the crawl raises, and when it was off.
+    ``stop_after_round``, when the crawl raises, and when it was off. A
+    round that raises leaves the persisted-RDD count where it found it.
     ``delta_state=False`` raises before anything is read or written."""
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet") \
         .orderBy("seed_id").limit(4)
@@ -217,14 +218,18 @@ def test_run_rounds_restores_adaptive_setting(spark, fixture_dir, tmp_path):
     assert spark.conf.get(AQE) == "true"
     assert os.listdir(retired.root) == []
 
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
     for before in ("true", "false"):
         spark.conf.set(AQE, before)
         try:
             failing = _RoundFailsStore(str(tmp_path / before), spark)
+            n_cached = persisted().size()
             with pytest.raises(RuntimeError, match="round commit failed"):
                 engine.run_rounds(spark, seeds, pages, failing,
                                   host_budget=2)
             assert spark.conf.get(AQE) == before
             assert failing.aqe == ["false", "false"]
+            # the failed round released its persisted frames
+            assert persisted().size() == n_cached
         finally:
             spark.conf.set(AQE, "true")

@@ -1,4 +1,5 @@
-"""The session's default driver heap fits the machine it runs on.
+"""The session's default driver heap fits the machine it runs on, and its
+JVM runs the compile policy of ``session.C2_HOT_ONLY``.
 
 Uses the shared ``spark`` fixture; starts no second session.
 """
@@ -38,3 +39,19 @@ def test_default_heap_rule(monkeypatch, phys_gib, expected):
     monkeypatch.setattr(session.os, "sysconf", lambda name: {
         "SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[name])
     assert session.default_driver_memory() == expected
+
+
+def test_fixture_jvm_runs_compile_policy(spark):
+    """Each tier-4 threshold the live JVM reports is the one in
+    ``C2_HOT_ONLY``. Spark launches the JVM with
+    ``-XX:+IgnoreUnrecognizedVMOptions``, so a mistyped flag would be
+    dropped without an error and leave the JDK default in place."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    flags = dict(f.removeprefix("-XX:").split("=")
+                 for f in session.C2_HOT_ONLY.split())
+    assert len(flags) == 4
+    assert {name: bean.getVMOption(name).getValue() for name in flags} \
+        == flags
